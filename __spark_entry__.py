@@ -672,9 +672,9 @@ def q_dlp_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dlp_dataflow_deidentification_spark.streaming import stateful
 
     tdf = _transcripts(spark, sf_dir, spread="conv")
-    # n_buckets: super-key batching — pack_greedy still runs per key, but
+    # n_buckets: keys share 64 buckets — pack_greedy still runs per key, but
     # one pandas dispatch per bucket instead of per conversation; output
-    # identical to per-key mode (test_bucketed_batched_requests_equals_per_key)
+    # does not depend on the count (test_batched_requests_invariant_to_bucket_count)
     out = stateful.batched_requests(
         tdf,
         key_col="conv_id",
@@ -728,9 +728,9 @@ def q_conv_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(HERE, "configs/deid_transcripts.json"), crypto_key=KEY
     )
     deid = dds.deidentify(tdf, template)
-    # n_buckets: super-key batching — one vectorized pandas fold per bucket
-    # instead of one dispatch per conversation; output identical to per-key
-    # mode (tests/test_stateful.py::test_bucketed_assembler_equals_per_key_*)
+    # n_buckets: one vectorized pandas fold per bucket instead of one
+    # dispatch per conversation; output does not depend on the count
+    # (tests/test_stateful.py::test_assembler_invariant_to_bucket_count_*)
     out = stateful.conversation_assembler(deid, gap_ms=1_800_000, n_buckets=64)
     return out.select(
         "conv_id",

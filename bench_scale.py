@@ -164,14 +164,16 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
     """Group-count scale curve for the chained deid → stateful-sessions
     stream (writes BENCH_STATEFUL_SCALE.json): FIXED ``turns`` total,
     conversations swept 5k/50k/500k — isolating per-GROUP overhead from
-    per-row cost. Two variants per level:
+    per-row cost. One variant per level, bucketed (n_buckets=256, the
+    bench/production path): cost should be ~flat across group counts —
+    per-micro-batch pandas dispatches are bounded by the bucket count, not
+    the key count.
 
-    * bucketed (n_buckets=256, the bench/production path): cost should be
-      ~flat across group counts — per-micro-batch pandas dispatches are
-      bounded by the bucket count, not the key count;
-    * per-key (skipped above 50k conversations — at 500k its dispatch cost
-      is the very pathology the bucketed mode removes): cost grows with
-      group count, recording WHY bucketing is the scale path.
+    The committed BENCH_STATEFUL_SCALE.json also holds a per-key leg (one
+    state row and one pandas dispatch per conversation, since removed): it
+    fell from 103.8k to 37.6k turns/s between 5k and 50k conversations
+    while bucketed held 100.8k → 124.6k — the measurement that made
+    bucketing the only stateful path.
     """
     import dlp_dataflow_deidentification_spark as dds
     from dlp_dataflow_deidentification_spark.sources.transcripts import (
@@ -194,24 +196,23 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
         synthesize_transcripts(spark, n_turns, n_conversations=n_convs).repartition(
             8
         ).write.mode("overwrite").parquet(in_dir)
-        for nb in (256, None):
-            ckpt = os.path.join(workdir, f"ckpt{tag}_{nb}")
-            shutil.rmtree(ckpt, ignore_errors=True)
-            q = (
-                jobs.deid_sessions_stream(
-                    spark, template, in_dir, gap_ms=1_800_000,
-                    watermark="1 minute", max_files_per_trigger=8, n_buckets=nb,
-                )
-                .writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+        ckpt = os.path.join(workdir, f"ckpt{tag}")
+        shutil.rmtree(ckpt, ignore_errors=True)
+        q = (
+            jobs.deid_sessions_stream(
+                spark, template, in_dir, gap_ms=1_800_000,
+                watermark="1 minute", max_files_per_trigger=8, n_buckets=256,
             )
-            q.awaitTermination(600)
-            if q.isActive:
-                q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+            .writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
+        if q.isActive:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(in_dir, ignore_errors=True)
     for n_convs in conv_levels:
         in_dir = os.path.join(workdir, f"turns_{n_convs}")
@@ -220,41 +221,37 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
             32
         ).write.mode("overwrite").parquet(in_dir)
         level = {"n_conversations": n_convs}
-        variants = [("bucketed_256", 256)]
-        if n_convs <= 50_000:
-            variants.append(("per_key", None))
-        for name, nb in variants:
-            ckpt = os.path.join(workdir, f"ckpt_{n_convs}_{name}")
-            shutil.rmtree(ckpt, ignore_errors=True)
-            t0 = time.time()
-            stream = jobs.deid_sessions_stream(
-                spark,
-                template,
-                in_dir,
-                gap_ms=1_800_000,
-                watermark="1 minute",
-                max_files_per_trigger=8,
-                n_buckets=nb,
-            )
-            q = (
-                stream.writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(1800)
-            if q.isActive:
-                q.stop()
-            wall = time.time() - t0
-            level[name] = {
-                "wall_sec": round(wall, 2),
-                # a timed-out run processed only part of `turns` — a rate
-                # over the full count would overstate throughput
-                "turns_per_sec": round(turns / wall, 1) if finished else None,
-                "finished": finished,
-            }
-            shutil.rmtree(ckpt, ignore_errors=True)
+        ckpt = os.path.join(workdir, f"ckpt_{n_convs}")
+        shutil.rmtree(ckpt, ignore_errors=True)
+        t0 = time.time()
+        stream = jobs.deid_sessions_stream(
+            spark,
+            template,
+            in_dir,
+            gap_ms=1_800_000,
+            watermark="1 minute",
+            max_files_per_trigger=8,
+            n_buckets=256,
+        )
+        q = (
+            stream.writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        finished = q.awaitTermination(1800)
+        if q.isActive:
+            q.stop()
+        wall = time.time() - t0
+        level["bucketed_256"] = {
+            "wall_sec": round(wall, 2),
+            # a timed-out run processed only part of `turns` — a rate
+            # over the full count would overstate throughput
+            "turns_per_sec": round(turns / wall, 1) if finished else None,
+            "finished": finished,
+        }
+        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(in_dir, ignore_errors=True)
         out["levels"].append(level)
         print(json.dumps(level), flush=True)

@@ -34,21 +34,21 @@ ROCKSDB_STATE_PROVIDER = (
 )
 
 
-def use_rocksdb_state_store(spark: SparkSession, changelog_checkpointing: bool = True) -> None:
+def use_rocksdb_state_store(spark: SparkSession) -> None:
     """Switch stateful streaming queries to the RocksDB state store (the
     north-star's store): window/join/state rows spill to executor-local
     RocksDB instead of the JVM heap, so state size is bounded by disk, not
     memory — required at 10^12-turn scale where open sessions/windows dwarf
-    any heap. ``changelog_checkpointing`` commits per-batch changelogs
-    instead of full snapshots (faster micro-batch commits; snapshots are
-    compacted in the background). Applies to queries started after this
-    call; the HDFS-backed default remains for anything already running."""
+    any heap. Changelog checkpointing is on: per-batch changelogs are
+    committed instead of full snapshots (faster micro-batch commits;
+    snapshots are compacted in the background). Applies to queries started
+    after this call; the HDFS-backed default remains for anything already
+    running."""
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_PROVIDER)
-    if changelog_checkpointing:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true",
+    )
 
 
 TRANSCRIPT_SCHEMA = StructType(
@@ -100,10 +100,9 @@ def deid_sessions_stream(
     Batch equivalent: ``conversation_assembler(deidentify(df, template))``
     (driver query ``conv_sessions``); stream≡batch equality is pinned by
     ``tests/test_stateful.py::test_deid_sessions_single_query_stream``.
-    ``n_buckets``: super-key batching — one state row / one vectorized
-    pandas fold per bucket instead of per conversation (see
-    ``conversation_assembler``); same output, ~|keys|/n_buckets fewer
-    per-micro-batch pandas dispatches.
+    ``n_buckets``: the assembler's bucket count (one state row / one
+    vectorized pandas fold per bucket, see ``conversation_assembler``);
+    keep it fixed across restarts of one checkpoint.
     """
     from .stateful import conversation_assembler
 

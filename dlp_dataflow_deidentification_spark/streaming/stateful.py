@@ -1,27 +1,29 @@
 """Custom stateful operators over the RocksDB/HDFS state store.
 
 ``batched_requests`` is the direct re-expression of the reference's
-BagState + event-time-timer batcher
-(beam/BatchRequestForDLP.java:44-106: buffer rows per sharded key, fire at
-the window end, greedily pack ≤ batchSizeBytes bags; V1 equivalent
-DLPTextToBigQueryStreaming.java:604-668; unit-test contract
-BatchRequestForDLPTest.java:59-121 asserts the multiset of emitted batch
-sizes per key). In Spark the operator is ``applyInPandasWithState``:
+ShardRows → BagState + event-time-timer batcher
+(beam/ShardRows.java:66-81 shards rows, then beam/BatchRequestForDLP.java:44-106
+buffers rows per sharded key, fires at the window end and greedily packs
+≤ batchSizeBytes bags; V1 equivalent DLPTextToBigQueryStreaming.java:604-668;
+unit-test contract BatchRequestForDLPTest.java:59-121 asserts the multiset of
+emitted batch sizes per key). ``conversation_assembler`` applies the same
+machinery to the transcript payload: per-conv_id turn accumulation emitted
+when the conversation goes idle past the gap (the stateful upgrade of
+session_window when per-session custom logic is needed).
 
-* state = (buffered byte size, buffered row count, next batch sequence)
-* new rows append to the buffer; every time the byte budget fills, a batch
-  row (key, batch_seq, n_rows, n_bytes) is emitted — greedy packing
-* an event-time timeout (watermark-driven — the Beam timer analogue)
-  flushes the remainder
-
-``conversation_assembler`` applies the same machinery to the transcript
-payload: per-conv_id turn accumulation emitted when the conversation goes
-idle past the gap (the stateful upgrade of session_window when per-session
-custom logic is needed).
+Both operators run on ONE shell (``_bucketed``): rows are grouped by
+``pmod(xxhash64(key), n_buckets)``, each bucket holds ONE state row (a JSON
+map of per-key carries, keyed by bucket — so ``n_buckets`` must not change
+across a checkpoint restart) and gets ONE vectorized pandas fold per
+micro-batch. Streaming input runs ``applyInPandasWithState`` with a
+watermark-driven event-time timeout (the Beam timer analogue) that flushes
+the due keys; batch input runs the same fold under ``applyInPandas`` with an
+empty carry and flushes every key at the end (the oracle-testable form).
 """
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
+import json
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -45,14 +47,37 @@ BATCH_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-_BATCH_STATE_SCHEMA = StructType(
+CONV_OUTPUT_SCHEMA = StructType(
     [
-        StructField("buf_bytes", LongType()),
-        StructField("buf_rows", IntegerType()),
-        StructField("next_seq", IntegerType()),
-        StructField("max_event_ms", LongType()),
+        StructField("conv_id", StringType()),
+        StructField("n_turns", IntegerType()),
+        StructField("n_pii_turns", IntegerType()),
+        StructField("first_ms", LongType()),
+        StructField("last_ms", LongType()),
     ]
 )
+
+# ONE state row per bucket: the JSON map of its keys' carries
+_STATE_SCHEMA = StructType([StructField("packed", StringType())])
+
+# Bucket count when the caller passes none. Fixed, not derived from conf:
+# carried state is keyed by bucket, so the count must be stable across
+# checkpoint restarts.
+DEFAULT_N_BUCKETS = 64
+
+_PII_RE = r"\[[A-Z_]+\]"
+_SESS_COLS = CONV_OUTPUT_SCHEMA.fieldNames()
+_BATCH_COLS = BATCH_OUTPUT_SCHEMA.fieldNames()
+
+# The folds run in pandas, where groupby drops null keys and the packed-state
+# JSON map cannot hold a null key — but Spark's groupBy semantics keep a
+# null-key group. Null keys are therefore encoded as this reserved sentinel
+# inside the fold/state and decoded back to null at every emit point. Control
+# chars cannot appear in any realistically sourced key (file names, table
+# keys, conversation ids); NUL itself is avoided — numpy's fixed-width
+# unicode storage strips trailing NUL bytes, so a bare "\\x00" silently
+# becomes "" through pandas fillna/groupby.
+_NULL_KEY = "\x01__null_key__\x01"
 
 
 def pack_greedy(
@@ -94,10 +119,9 @@ def pack_greedy(
 def _payload_sizes(
     pdf: pd.DataFrame, payload_col: str, order_col: "str | None"
 ) -> "np.ndarray":
-    """Per-row payload size in packing order — the ONE sizing rule shared by
-    the per-key and bucketed packers. fillna BEFORE astype(str): astype
-    would turn None into the literal 4-char string "None", charging null
-    payloads 4 bytes. Size = UTF-8 BYTES, not codepoints: the reference
+    """Per-row payload size in packing order. fillna BEFORE astype(str):
+    astype would turn None into the literal 4-char string "None", charging
+    null payloads 4 bytes. Size = UTF-8 BYTES, not codepoints: the reference
     budgets Table.Row.getSerializedSize()
     (beam/BatchRequestForDLP.java:62-66), which is proto-serialized UTF-8 —
     a codepoint count would under-charge non-ASCII payloads up to 4x and
@@ -115,152 +139,6 @@ def _payload_sizes(
     )
 
 
-def batched_requests(
-    df: DataFrame,
-    key_col: str = "conv_id",
-    payload_col: str = "text",
-    ts_col: str = "ts",
-    max_batch_bytes: int = 500_000,
-    flush_gap_ms: int = 10_000,
-    watermark: str = "10 seconds",
-    order_col: "str | None" = None,
-    n_buckets: "int | None" = None,
-) -> DataFrame:
-    """Greedy byte-budget batching per key with event-time flush.
-
-    Streaming input: ``applyInPandasWithState`` (state store + watermark
-    timeout flushes the remainder). Batch input: ``applyInPandasWithState``
-    is streaming-only in Spark, so the operator degrades to a stateless
-    ``applyInPandas`` over the same ``pack_greedy`` core — one invocation
-    per key, remainder flushed as the final batch; this is the
-    oracle-testable form. ``order_col``: pack rows in this deterministic
-    order instead of arrival/partition order (required for the batch oracle;
-    in streaming it orders only within each delivered chunk — arrival order
-    across micro-batches is the semantic, as in the reference's BagState).
-    Output: key, batch_seq, n_rows, n_bytes.
-
-    ``n_buckets``: super-key mode — ONE state row (JSON map of per-key
-    buffers) and ONE pandas dispatch per ``pmod(xxhash64(key), n_buckets)``
-    bucket, ``pack_greedy`` still applied per key inside it (ordering
-    nuance: with ``order_col``, per-key mode sorts each delivered Arrow
-    chunk; bucketed mode sorts the key's rows across the WHOLE delivered
-    micro-batch — a strict superset, and identical whenever a key's rows
-    fit one chunk or arrive ordered). Same amortization as
-    ``conversation_assembler(n_buckets=...)`` — this IS the
-    reference's ShardRows→BatchRequestForDLP shape (shard precisely so
-    per-key dispatch amortizes, beam/ShardRows.java:66-81); at millions of
-    live keys per-key Arrow dispatch dominates the stateless work. Output
-    identical to per-key mode (pinned by tests).
-    """
-    if n_buckets is not None:
-        return _bucketed_batched_requests(
-            df,
-            key_col,
-            payload_col,
-            ts_col,
-            max_batch_bytes,
-            flush_gap_ms,
-            watermark,
-            order_col,
-            n_buckets,
-        )
-
-    def _sizes(pdf: pd.DataFrame) -> "np.ndarray":
-        return _payload_sizes(pdf, payload_col, order_col)
-
-    wdf = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-
-    if not wdf.isStreaming:
-        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
-            key = pdf[key_col].iloc[0]
-            emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
-                _sizes(pdf), 0, 0, 0, max_batch_bytes
-            )
-            out = [(key, seq, n, b) for seq, n, b in emitted]
-            if buf_rows:  # full flush: the remainder is the final batch
-                out.append((key, next_seq, buf_rows, buf_bytes))
-            return pd.DataFrame(out, columns=["key", "batch_seq", "n_rows", "n_bytes"])
-
-        return wdf.groupBy(F.col(key_col)).applyInPandas(bfn, BATCH_OUTPUT_SCHEMA)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf_bytes, buf_rows, next_seq, max_ms = state.get
-        else:
-            buf_bytes, buf_rows, next_seq, max_ms = 0, 0, 0, 0
-
-        out: list[tuple] = []
-        if state.hasTimedOut:
-            if buf_rows:
-                out.append((key[0], next_seq, buf_rows, buf_bytes))
-            state.remove()
-        else:
-            for pdf in pdfs:
-                sizes = _sizes(pdf)
-                if ts_col in pdf.columns and len(pdf):
-                    ms = (pdf[ts_col].astype("int64") // 1_000_000).max()
-                    max_ms = max(max_ms, int(ms))
-                if not len(sizes):
-                    continue
-                emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
-                    sizes, buf_bytes, buf_rows, next_seq, max_batch_bytes
-                )
-                out.extend((key[0], seq, n, b) for seq, n, b in emitted)
-            state.update((buf_bytes, buf_rows, next_seq, max_ms))
-            # Beam: event-time timer at window max; here: watermark-driven
-            # timeout at last-event-time + flush gap. Clamped to just past
-            # the CURRENT watermark: during multi-batch catch-up the
-            # watermark can already be beyond an old key's event times, and
-            # Spark rejects a timeout earlier than the watermark
-            # (INVALID_TIMEOUT_TIMESTAMP) — a past-due buffer should simply
-            # flush at the next tick.
-            state.setTimeoutTimestamp(
-                max(max_ms + flush_gap_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        if out:
-            yield pd.DataFrame(out, columns=["key", "batch_seq", "n_rows", "n_bytes"])
-
-    wdf = wdf.withWatermark(ts_col, watermark)
-    return wdf.groupBy(F.col(key_col)).applyInPandasWithState(
-        fn,
-        BATCH_OUTPUT_SCHEMA,
-        _BATCH_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-CONV_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("n_turns", IntegerType()),
-        StructField("n_pii_turns", IntegerType()),
-        StructField("first_ms", LongType()),
-        StructField("last_ms", LongType()),
-    ]
-)
-
-# bucketed (super-key) mode: ONE state row per bucket holding the packed
-# per-conversation open sessions (JSON {conv_id: [n, npii, first, last]})
-_SUPER_STATE_SCHEMA = StructType([StructField("packed", StringType())])
-
-_PII_RE = r"\[[A-Z_]+\]"
-_SESS_COLS = ["conv_id", "n_turns", "n_pii_turns", "first_ms", "last_ms"]
-
-# Bucketed modes fold in pandas, where groupby drops null keys and the
-# packed-state JSON map cannot hold a null key — but per-key mode (Spark
-# groupBy) KEEPS a null-key group, and the bucketed modes promise identical
-# output. Null keys are therefore encoded as this reserved sentinel inside
-# the fold/state and decoded back to null at every emit point. Control
-# chars cannot appear in any realistically sourced key (file names, table
-# keys, conversation ids); NUL itself is avoided — numpy's fixed-width
-# unicode storage strips trailing NUL bytes, so a bare "\\x00" silently
-# becomes "" through pandas fillna/groupby.
-_NULL_KEY = "\x01__null_key__\x01"
-
-
 def _decode_null_key(df: pd.DataFrame, col: str) -> pd.DataFrame:
     mask = df[col] == _NULL_KEY
     if mask.any():
@@ -269,15 +147,52 @@ def _decode_null_key(df: pd.DataFrame, col: str) -> pd.DataFrame:
     return df
 
 
+def _pack_bucket(
+    pdf: pd.DataFrame,
+    carried: dict,
+    key_col: str,
+    payload_col: str,
+    ts_col: str,
+    order_col: "str | None",
+    max_batch_bytes: int,
+):
+    """Per-key ``pack_greedy`` over one bucket's delivered rows, seeded with
+    the carried buffers ``{key: [buf_bytes, buf_rows, next_seq,
+    max_event_ms]}`` (updated in place; every key seen keeps an entry so its
+    batch_seq continues across micro-batches). A key's rows are packed in
+    ``order_col`` order across the whole delivered micro-batch, else in
+    arrival order. ``dropna=False`` + sentinel: null keys form one group
+    (Spark groupBy semantics), carried under ``_NULL_KEY``. Returns
+    (emitted batch rows with sentinel-encoded keys, carried)."""
+    out: list[tuple] = []
+    ms_all = pdf[ts_col].astype("int64") // 1_000_000
+    for key, kdf in pdf.groupby(key_col, sort=False, dropna=False):
+        k = _NULL_KEY if pd.isna(key) else key
+        k_ms = int(ms_all.loc[kdf.index].max())
+        # a new key's max starts at its own rows, not 0: pre-epoch keys
+        # would otherwise get a deadline pinned at 0 + gap
+        buf_bytes, buf_rows, next_seq, max_ms = carried.get(k, (0, 0, 0, k_ms))
+        max_ms = max(max_ms, k_ms)
+        emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
+            _payload_sizes(kdf, payload_col, order_col),
+            buf_bytes,
+            buf_rows,
+            next_seq,
+            max_batch_bytes,
+        )
+        out.extend((k, seq, n, b) for seq, n, b in emitted)
+        carried[k] = [int(buf_bytes), int(buf_rows), int(next_seq), int(max_ms)]
+    return pd.DataFrame(out, columns=_BATCH_COLS), carried
+
+
 def _fold_bucket(pdf: pd.DataFrame, carried: dict, gap_ms: int):
     """Vectorized gap-session fold over ALL conversations in one bucket.
 
-    Semantically identical to ``conversation_assembler``'s per-key scalar
-    fold (same split rule ``ts - running_max_last >= gap_ms``, same
-    min/max first/last merge against carried state), but one pandas pass
-    per BUCKET instead of one Python dispatch per conversation — the
-    ShardRows-style batching that amortizes per-key overhead
-    (beam/ShardRows.java:66-81).
+    Semantically identical to a per-conversation scalar fold (split when
+    ``ts - running_max_last >= gap_ms``, min/max first/last merge against
+    the carried open session), but one pandas pass per BUCKET instead of one
+    Python dispatch per conversation — the ShardRows-style batching that
+    amortizes per-key overhead (beam/ShardRows.java:66-81).
 
     Two cumsum passes:
       1. rows sorted by (conv, ts): session breaks where the gap to the
@@ -352,14 +267,134 @@ def _fold_bucket(pdf: pd.DataFrame, carried: dict, gap_ms: int):
     is_open = merged["conv_id"].ne(merged["conv_id"].shift(-1)).to_numpy()
     return merged, is_open
 
-_CONV_STATE_SCHEMA = StructType(
-    [
-        StructField("n_turns", IntegerType()),
-        StructField("n_pii_turns", IntegerType()),
-        StructField("first_ms", LongType()),
-        StructField("last_ms", LongType()),
-    ]
-)
+
+def _close_sessions(pdf: pd.DataFrame, carried: dict, gap_ms: int):
+    """``_fold_bucket`` in the shell's fold shape: (closed sessions, carried
+    ``{conv_id: [n, npii, first_ms, last_ms]}`` of the open ones)."""
+    sessions, is_open = _fold_bucket(pdf, carried, gap_ms)
+    carried = {
+        r.conv_id: [int(r.n_turns), int(r.n_pii_turns), int(r.first_ms), int(r.last_ms)]
+        for r in sessions[is_open].itertuples()
+    }
+    return sessions[~is_open], carried
+
+
+def _bucketed(
+    df: DataFrame,
+    key_col: str,
+    ts_col: str,
+    watermark: str,
+    gap_ms: int,
+    n_buckets: "int | None",
+    schema: StructType,
+    fold: Callable[[pd.DataFrame, dict], "tuple[pd.DataFrame, dict]"],
+    flush_row: Callable[[str, list], "tuple | None"],
+) -> DataFrame:
+    """The one stateful shell. ``fold(pdf, carried) -> (rows, carried)``
+    folds one bucket's rows into its carried per-key values (a JSON-able
+    list whose ``v[3]`` is the key's last event ms); ``flush_row(key, v)``
+    is the output row a carried key emits when flushed (None: nothing to
+    emit). Keys are sentinel-encoded inside; decoded on emit.
+
+    Streaming: the bucket's event-time timeout is armed at the EARLIEST
+    carried deadline ``v[3] + gap_ms``, clamped to just past the current
+    watermark — during multi-batch catch-up the watermark can already be
+    beyond an old key's event times, and Spark rejects a timeout earlier
+    than the watermark (INVALID_TIMEOUT_TIMESTAMP); a past-due key simply
+    flushes at the next tick. A firing flushes exactly the due keys and
+    re-arms for the rest."""
+    cols = schema.fieldNames()
+    wdf = df.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
+        "__bucket",
+        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets or DEFAULT_N_BUCKETS)),
+    )
+
+    def flush(items: Iterable) -> pd.DataFrame:
+        rows = (flush_row(k, v) for k, v in items)
+        return pd.DataFrame([r for r in rows if r is not None], columns=cols)
+
+    if not wdf.isStreaming:
+
+        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
+            # full flush: every carried key's remainder is a final record
+            rows, carried = fold(pdf, {})
+            parts = [f for f in (rows, flush(carried.items())) if len(f)]
+            out = pd.concat(parts, ignore_index=True) if parts else rows
+            return _decode_null_key(out, cols[0])
+
+        return wdf.groupBy("__bucket").applyInPandas(bfn, schema)
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        carried: dict = json.loads(state.get[0]) if state.exists else {}
+        wm = state.getCurrentWatermarkMs()
+        if state.hasTimedOut:
+            out = flush((k, v) for k, v in carried.items() if v[3] + gap_ms <= wm)
+            carried = {k: v for k, v in carried.items() if v[3] + gap_ms > wm}
+        else:
+            out, carried = fold(pd.concat(list(pdfs), ignore_index=True), carried)
+        if carried:
+            state.update((json.dumps(carried),))
+            state.setTimeoutTimestamp(
+                max(min(v[3] + gap_ms for v in carried.values()), wm + 1)
+            )
+        else:
+            state.remove()
+        if len(out):
+            yield _decode_null_key(out, cols[0])
+
+    return (
+        wdf.withWatermark(ts_col, watermark)
+        .groupBy("__bucket")
+        .applyInPandasWithState(
+            fn, schema, _STATE_SCHEMA, "append", GroupStateTimeout.EventTimeTimeout
+        )
+    )
+
+
+def batched_requests(
+    df: DataFrame,
+    key_col: str = "conv_id",
+    payload_col: str = "text",
+    ts_col: str = "ts",
+    max_batch_bytes: int = 500_000,
+    flush_gap_ms: int = 10_000,
+    watermark: str = "10 seconds",
+    order_col: "str | None" = None,
+    n_buckets: "int | None" = None,
+) -> DataFrame:
+    """Greedy UTF-8-byte-budget batching per key with event-time flush.
+
+    Every time a key's buffer fills ``max_batch_bytes`` a batch row
+    (key, batch_seq, n_rows, n_bytes) is emitted; the remainder is flushed
+    when the watermark passes the key's last event + ``flush_gap_ms``
+    (streaming) or at the end (batch input). ``order_col``: pack each key's
+    rows in this deterministic order instead of arrival order (required for
+    the batch oracle; in streaming it orders a key's rows within each
+    micro-batch — arrival order across micro-batches is the semantic, as in
+    the reference's BagState).
+
+    ``n_buckets`` (default ``DEFAULT_N_BUCKETS``): keys share
+    ``pmod(xxhash64(key), n_buckets)`` buckets, one state row and one pandas
+    dispatch per bucket, ``pack_greedy`` still applied per key inside it —
+    the reference's ShardRows→BatchRequestForDLP shape. It must not change
+    across a checkpoint restart: carried buffers are keyed by bucket.
+    """
+    return _bucketed(
+        df,
+        key_col,
+        ts_col,
+        watermark,
+        flush_gap_ms,
+        n_buckets,
+        BATCH_OUTPUT_SCHEMA,
+        lambda pdf, carried: _pack_bucket(
+            pdf, carried, key_col, payload_col, ts_col, order_col, max_batch_bytes
+        ),
+        # a buffered remainder is the key's final batch; an empty one emits nothing
+        lambda k, v: (k, v[2], v[1], v[0]) if v[1] else None,
+    )
 
 
 def conversation_assembler(
@@ -368,307 +403,30 @@ def conversation_assembler(
     watermark: str = "30 minutes",
     n_buckets: "int | None" = None,
 ) -> DataFrame:
-    """Per-conv_id stateful assembly: accumulate turn stats in state, emit one
-    conversation record when the conversation idles past ``gap_ms`` (event-time
-    timeout) — the custom-logic upgrade of ``session_window``. Batch input
-    degrades to a stateless ``applyInPandas`` (applyInPandasWithState is
-    streaming-only): all turns per key in one invocation, every gap-closed
-    session emitted including the final one.
+    """Per-conv_id gap-session assembly: one record (conv_id, n_turns,
+    n_pii_turns, first_ms, last_ms) per session, a session closing when the
+    next turn is ``gap_ms`` or more after it. Streaming input emits a session
+    once the conversation idles past ``gap_ms`` (event-time timeout); batch
+    input emits every session including each conversation's last one.
 
-    ``n_buckets``: bucketed (super-key) mode — group by
-    ``pmod(xxhash64(conv_id), n_buckets)`` instead of per conv_id, with ONE
-    state row per bucket carrying every open conversation in it and ONE
-    vectorized pandas fold per bucket (``_fold_bucket``). This is the
-    ShardRows batching analogue (beam/ShardRows.java:66-81 — shard precisely
-    to amortize per-key dispatch): at millions of small conversations the
-    per-group Arrow/pandas dispatch dominates, and bucketing turns ~|keys|
-    dispatches per micro-batch into ~n_buckets. Output is identical to
-    per-key mode (pinned by tests). Sizing: open conversations per bucket ≈
-    live_keys / n_buckets; keep the packed state row well under the state
-    store's value-size comfort zone (a few MB) — e.g. 1e8 live conversations
-    → n_buckets ≈ 1e5–1e6 spread over executors."""
-    if n_buckets is not None:
-        return _bucketed_assembler(df, gap_ms, watermark, n_buckets)
-
-    cols = ["conv_id", "n_turns", "n_pii_turns", "first_ms", "last_ms"]
-
-    def _sessions(
-        pdf: pd.DataFrame,
-        key,
-        n: int = 0,
-        npii: int = 0,
-        first_ms: int = 0,
-        last_ms: int = 0,
-    ):
-        """ONE gap-split loop shared by the batch and streaming paths:
-        fold ts-sorted turns into the carried (n, npii, first_ms, last_ms)
-        open-session state, emitting a record at every gap. Returns
-        (closed_records, open_session_state). ``n == 1`` (not a falsy
-        first_ms) marks a session's first turn, so epoch-0 timestamps are
-        handled correctly."""
-        pdf = pdf.sort_values("ts", kind="mergesort")
-        ms = (pdf["ts"].astype("int64") // 1_000_000).to_numpy()
-        pii = pdf["text"].str.contains(r"\[[A-Z_]+\]", regex=True, na=False).to_numpy()
-        out = []
-        for i in range(len(pdf)):
-            if n and ms[i] - last_ms >= gap_ms:
-                out.append((key, n, npii, first_ms, last_ms))
-                n, npii = 0, 0
-            n += 1
-            npii += int(pii[i])
-            # min() (not just the n==1 row): a late within-watermark row in a
-            # LATER micro-batch can precede the carried session's start
-            first_ms = int(ms[i]) if n == 1 else min(first_ms, int(ms[i]))
-            # same n==1 seeding as first_ms: a bare max() against the 0
-            # initializer would pin pre-1970 (negative-ms) sessions to 0
-            last_ms = int(ms[i]) if n == 1 else max(last_ms, int(ms[i]))
-        return out, (n, npii, first_ms, last_ms)
-
-    if not df.isStreaming:
-        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.copy()
-            pdf["ts"] = pd.to_datetime(pdf["ts"])
-            out, (n, npii, first_ms, last_ms) = _sessions(pdf, pdf["conv_id"].iloc[0])
-            if n:  # full flush: the trailing open session is the last record
-                out.append((pdf["conv_id"].iloc[0], n, npii, first_ms, last_ms))
-            return pd.DataFrame(out, columns=cols)
-
-        return (
-            df.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.col("conv_id"))
-            .applyInPandas(bfn, CONV_OUTPUT_SCHEMA)
-        )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, npii, first_ms, last_ms = state.get
-        else:
-            n, npii, first_ms, last_ms = 0, 0, 0, 0
-        if state.hasTimedOut:
-            if n:
-                yield pd.DataFrame([(key[0], n, npii, first_ms, last_ms)], columns=cols)
-            state.remove()
-            return
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        # same loop as the batch path (_sessions), seeded with carried state
-        out, (n, npii, first_ms, last_ms) = _sessions(
-            batch, key[0], n, npii, first_ms, last_ms
-        )
-        state.update((n, npii, first_ms, last_ms))
-        # clamp to just past the current watermark (see batched_requests):
-        # an already-idle conversation times out at the next tick instead of
-        # crashing the query with INVALID_TIMEOUT_TIMESTAMP
-        state.setTimeoutTimestamp(
-            max(last_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    wdf = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if wdf.isStreaming:
-        wdf = wdf.withWatermark("ts", watermark)
-    return wdf.groupBy(F.col("conv_id")).applyInPandasWithState(
-        fn,
+    ``n_buckets`` (default ``DEFAULT_N_BUCKETS``): conversations share
+    ``pmod(xxhash64(conv_id), n_buckets)`` buckets, one state row and ONE
+    vectorized pandas fold per bucket (``_fold_bucket``) — the ShardRows
+    batching analogue (beam/ShardRows.java:66-81): at millions of small
+    conversations per-group Arrow/pandas dispatch would dominate. It must
+    not change across a checkpoint restart: carried sessions are keyed by
+    bucket. Sizing: open conversations per bucket ≈ live_keys / n_buckets;
+    keep the packed state row well under the state store's value-size
+    comfort zone (a few MB) — e.g. 1e8 live conversations → n_buckets ≈
+    1e5–1e6 spread over executors."""
+    return _bucketed(
+        df,
+        "conv_id",
+        "ts",
+        watermark,
+        gap_ms,
+        n_buckets,
         CONV_OUTPUT_SCHEMA,
-        _CONV_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _bucketed_assembler(
-    df: DataFrame, gap_ms: int, watermark: str, n_buckets: int
-) -> DataFrame:
-    """Super-key implementation of ``conversation_assembler`` (see its
-    docstring): one state row + one vectorized fold per bucket. Per-conv
-    open sessions ride in the bucket's state as a JSON map
-    ``{conv_id: [n, npii, first_ms, last_ms]}``; the bucket's event-time
-    timeout is armed at the EARLIEST open conversation's deadline
-    (min(last_ms) + gap_ms, watermark-clamped like the per-key path), and a
-    firing flushes exactly the conversations whose deadline the watermark
-    passed, re-arming for the rest."""
-    import json
-
-    wdf = df.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
-        "__bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets))
-    )
-
-    if not wdf.isStreaming:
-
-        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
-            # full flush: open sessions are final records too
-            sessions, _ = _fold_bucket(pdf, {}, gap_ms)
-            return _decode_null_key(sessions, "conv_id")
-
-        return wdf.groupBy("__bucket").applyInPandas(bfn, CONV_OUTPUT_SCHEMA)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        carried: dict = json.loads(state.get[0]) if state.exists else {}
-
-        if state.hasTimedOut:
-            wm = state.getCurrentWatermarkMs()
-            due = [
-                (None if c == _NULL_KEY else c, v[0], v[1], v[2], v[3])
-                for c, v in carried.items()
-                if v[3] + gap_ms <= wm
-            ]
-            keep = {c: v for c, v in carried.items() if v[3] + gap_ms > wm}
-            if keep:
-                state.update((json.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(min(v[3] + gap_ms for v in keep.values()), wm + 1)
-                )
-            else:
-                state.remove()
-            if due:
-                yield pd.DataFrame(due, columns=_SESS_COLS)
-            return
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        sessions, is_open = _fold_bucket(batch, carried, gap_ms)
-        closed = _decode_null_key(sessions[~is_open], "conv_id")
-        carried = {
-            r.conv_id: [int(r.n_turns), int(r.n_pii_turns), int(r.first_ms), int(r.last_ms)]
-            for r in sessions[is_open].itertuples()
-        }
-        state.update((json.dumps(carried),))
-        # same watermark clamp as the per-key path: a past-due bucket
-        # flushes at the next tick instead of crashing the query
-        state.setTimeoutTimestamp(
-            max(
-                min(v[3] + gap_ms for v in carried.values()),
-                state.getCurrentWatermarkMs() + 1,
-            )
-        )
-        if len(closed):
-            yield closed
-
-    wdf = wdf.withWatermark("ts", watermark)
-    return wdf.groupBy("__bucket").applyInPandasWithState(
-        fn,
-        CONV_OUTPUT_SCHEMA,
-        _SUPER_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _bucketed_batched_requests(
-    df: DataFrame,
-    key_col: str,
-    payload_col: str,
-    ts_col: str,
-    max_batch_bytes: int,
-    flush_gap_ms: int,
-    watermark: str,
-    order_col: "str | None",
-    n_buckets: int,
-) -> DataFrame:
-    """Super-key implementation of ``batched_requests`` (see its docstring):
-    per-key carry buffers ride in ONE bucket state row as a JSON map
-    ``{key: [buf_bytes, buf_rows, next_seq, max_event_ms]}``; the bucket's
-    event-time timeout fires at the EARLIEST key deadline (min(max_ms) +
-    flush_gap, watermark-clamped) and flushes exactly the due keys'
-    remainders, re-arming for the rest. ``pack_greedy`` (the numpy core)
-    still runs per key — bucketing amortizes only the per-group
-    Arrow/pandas dispatch, which is what dominates at many small keys."""
-    import json
-
-    def _sizes(pdf: pd.DataFrame) -> "np.ndarray":
-        return _payload_sizes(pdf, payload_col, order_col)
-
-    def _fold(pdf: pd.DataFrame, carried: dict):
-        """Per-key pack_greedy over one bucket's delivered rows, seeded with
-        the carried buffers. Returns (emitted rows, new carried).
-        ``dropna=False`` + sentinel: per-key mode keeps a null-key group
-        (Spark groupBy), so the bucketed fold must too — pandas groupby
-        would silently drop those rows, and the carried JSON map needs a
-        string key (_NULL_KEY), decoded back to null on emit."""
-        out: list[tuple] = []
-        ms_all = (
-            (pdf[ts_col].astype("int64") // 1_000_000)
-            if ts_col in pdf.columns and len(pdf)
-            else None
-        )
-        for key, kdf in pdf.groupby(key_col, sort=False, dropna=False):
-            k_enc = _NULL_KEY if pd.isna(key) else key
-            k_out = None if pd.isna(key) else key
-            st = carried.get(k_enc, [0, 0, 0, 0])
-            buf_bytes, buf_rows, next_seq, max_ms = st
-            if ms_all is not None:
-                max_ms = max(max_ms, int(ms_all.loc[kdf.index].max()))
-            emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
-                _sizes(kdf), buf_bytes, buf_rows, next_seq, max_batch_bytes
-            )
-            out.extend((k_out, seq, n, b) for seq, n, b in emitted)
-            carried[k_enc] = [int(buf_bytes), int(buf_rows), int(next_seq), int(max_ms)]
-        return out, carried
-
-    wdf = df.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
-        "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    )
-    out_cols = ["key", "batch_seq", "n_rows", "n_bytes"]
-
-    if not wdf.isStreaming:
-
-        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
-            out, carried = _fold(pdf, {})
-            for key, (bb, br, seq, _ms) in carried.items():
-                if br:  # full flush: each remainder is its key's final batch
-                    out.append((None if key == _NULL_KEY else key, seq, br, bb))
-            return pd.DataFrame(out, columns=out_cols)
-
-        return wdf.groupBy("__bucket").applyInPandas(bfn, BATCH_OUTPUT_SCHEMA)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        carried: dict = json.loads(state.get[0]) if state.exists else {}
-
-        if state.hasTimedOut:
-            wm = state.getCurrentWatermarkMs()
-            due, keep = [], {}
-            for k, (bb, br, seq, max_ms) in carried.items():
-                if max_ms + flush_gap_ms <= wm:
-                    if br:
-                        due.append((None if k == _NULL_KEY else k, seq, br, bb))
-                else:
-                    keep[k] = [bb, br, seq, max_ms]
-            if keep:
-                state.update((json.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(
-                        min(v[3] + flush_gap_ms for v in keep.values()), wm + 1
-                    )
-                )
-            else:
-                state.remove()
-            if due:
-                yield pd.DataFrame(due, columns=out_cols)
-            return
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        out, carried = _fold(batch, carried)
-        state.update((json.dumps(carried),))
-        state.setTimeoutTimestamp(
-            max(
-                min(v[3] + flush_gap_ms for v in carried.values()),
-                state.getCurrentWatermarkMs() + 1,
-            )
-        )
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    wdf = wdf.withWatermark(ts_col, watermark)
-    return wdf.groupBy("__bucket").applyInPandasWithState(
-        fn,
-        BATCH_OUTPUT_SCHEMA,
-        _SUPER_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        lambda pdf, carried: _close_sessions(pdf, carried, gap_ms),
+        lambda k, v: (k, *v),
     )

@@ -148,17 +148,18 @@ def test_vectorized_packer_equals_scalar_greedy(sizes, carry_bytes, carry_rows, 
 
 
 # ---------------------------------------------------------------------------
-# bucketed session fold ≡ per-key scalar fold (pure pandas, no Spark job):
-# the super-key mode's two-cumsum merge (including the carried-session
-# running-max rule) must reproduce the scalar per-key fold on arbitrary
-# timestamps — ties, negative ms, carried sessions overlapping/bridging
-# chunk sessions, late rows before the carried start.
+# bucketed session fold ≡ per-conversation scalar fold (pure pandas, no
+# Spark job): the two-cumsum merge (including the carried-session running-max
+# rule) must reproduce the scalar fold on arbitrary timestamps — ties,
+# negative ms, carried sessions overlapping/bridging chunk sessions, late
+# rows before the carried start, and a null conversation id (sentinel key).
 # ---------------------------------------------------------------------------
 
 
 def _scalar_fold(rows_ms_pii, carried, gap_ms):
-    """The per-key reference fold (streaming/stateful.py::_sessions semantics):
-    rows sorted by ms, split when ms - running_last >= gap, min/max merge."""
+    """The per-conversation reference fold — the session rule
+    ``stateful._fold_bucket`` vectorizes, in plain Python: rows sorted by ms,
+    split when ms - running_last >= gap, min/max merge."""
     n, npii, first, last = carried
     out = []
     for ms, pii in sorted(rows_ms_pii, key=lambda x: x[0]):
@@ -176,7 +177,8 @@ def _scalar_fold(rows_ms_pii, carried, gap_ms):
 @given(
     st.lists(
         st.tuples(
-            st.integers(min_value=0, max_value=3),  # conv id (few keys → collisions)
+            # conv id (few keys → collisions; None → the null-key sentinel)
+            st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
             st.integers(min_value=-50, max_value=50),  # ms (small range → ties/gaps)
             st.booleans(),  # pii flag
         ),
@@ -184,7 +186,7 @@ def _scalar_fold(rows_ms_pii, carried, gap_ms):
         max_size=40,
     ),
     st.dictionaries(  # carried open sessions per conv
-        st.integers(min_value=0, max_value=3),
+        st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
         st.tuples(
             st.integers(min_value=1, max_value=5),  # n
             st.integers(min_value=0, max_value=5),  # npii
@@ -197,27 +199,34 @@ def _scalar_fold(rows_ms_pii, carried, gap_ms):
 def test_fold_bucket_equals_scalar_fold_property(rows, carried_raw):
     import pandas as pd
 
-    from dlp_dataflow_deidentification_spark.streaming.stateful import _fold_bucket
+    from dlp_dataflow_deidentification_spark.streaming.stateful import (
+        _NULL_KEY,
+        _fold_bucket,
+    )
 
     GAP = 10
+
+    def name(c):  # the fold's key: sentinel-encoded null
+        return _NULL_KEY if c is None else str(c)
+
     # normalize carried: first <= last
     carried = {
-        str(c): [n, npii, min(f, l), max(f, l)]
+        name(c): [n, npii, min(f, l), max(f, l)]
         for c, (n, npii, f, l) in carried_raw.items()
     }
     pdf = pd.DataFrame(
         {
-            "conv_id": [str(c) for c, _, _ in rows],
+            "conv_id": [None if c is None else str(c) for c, _, _ in rows],
             "ts": pd.to_datetime([ms * 1_000_000 for _, ms, _ in rows], unit="ns"),
             "text": ["[PII]" if p else "x" for _, _, p in rows],
         }
     )
     sessions, is_open = _fold_bucket(pdf, dict(carried), GAP)
 
-    convs = sorted(set(pdf["conv_id"]) | set(carried))
+    convs = sorted({name(c) for c, _, _ in rows} | set(carried))
     for conv in convs:
         rows_c = [
-            (ms, int(p)) for c, ms, p in rows if str(c) == conv
+            (ms, int(p)) for c, ms, p in rows if name(c) == conv
         ]
         want_closed, want_open = _scalar_fold(
             rows_c, tuple(carried.get(conv, (0, 0, 0, 0))), GAP
@@ -236,3 +245,84 @@ def test_fold_bucket_equals_scalar_fold_property(rows, carried_raw):
         assert sorted(got_closed) == sorted(want_closed), (conv, rows_c, carried)
         if rows_c or conv in carried:
             assert got_open == [want_open], (conv, rows_c, carried)
+
+
+# ---------------------------------------------------------------------------
+# bucketed packer fold ≡ per-key scalar greedy packer (pure pandas, no Spark
+# job): ``_pack_bucket`` over several delivered chunks, its carry round-
+# tripped through JSON like the state row, must emit the batches and leave
+# the buffers a per-key scalar packer would — null keys, UTF-8 sizing, null
+# payloads, and order_col sorting within each chunk included.
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.integers(min_value=0, max_value=3)),  # key
+            st.one_of(st.none(), st.text(alphabet="ab\u00e9\U0001F600", max_size=8)),
+            st.integers(min_value=-50, max_value=50),  # event ms
+            st.integers(min_value=0, max_value=5),  # order_col value (ties)
+        ),
+        min_size=2,
+        max_size=40,
+    ),
+    st.lists(st.integers(min_value=1, max_value=39), max_size=2),  # extra cuts
+    st.integers(min_value=1, max_value=30),  # max_batch_bytes
+    st.booleans(),  # pack in order_col order
+)
+def test_pack_bucket_equals_scalar_per_key_packer_property(
+    rows, cuts, max_bytes, ordered
+):
+    import json
+
+    import pandas as pd
+
+    from dlp_dataflow_deidentification_spark.streaming.stateful import (
+        _NULL_KEY,
+        _pack_bucket,
+    )
+
+    # at least two delivered chunks, so the carry is exercised
+    bounds = sorted({0, len(rows) // 2, len(rows)} | {c for c in cuts if c < len(rows)})
+    chunks = [rows[a:b] for a, b in zip(bounds, bounds[1:])]
+
+    carried, got = {}, []
+    for chunk in chunks:
+        pdf = pd.DataFrame(
+            {
+                "conv_id": [None if k is None else f"k{k}" for k, _, _, _ in chunk],
+                "text": [t for _, t, _, _ in chunk],
+                "ts": pd.to_datetime([ms * 1_000_000 for _, _, ms, _ in chunk], unit="ns"),
+                "turn_idx": [o for _, _, _, o in chunk],
+            }
+        )
+        out, carried = _pack_bucket(
+            pdf, carried, "conv_id", "text", "ts", "turn_idx" if ordered else None, max_bytes
+        )
+        got.extend(out.itertuples(index=False, name=None))
+        carried = json.loads(json.dumps(carried))  # the state-row round trip
+
+    want, state = [], {}
+    for chunk in chunks:
+        per_key = {}
+        for k, text, ms, order in chunk:
+            key = _NULL_KEY if k is None else f"k{k}"
+            per_key.setdefault(key, []).append((order, text, ms))
+        for key, krows in per_key.items():
+            if ordered:
+                krows = sorted(krows, key=lambda r: r[0])  # stable, like mergesort
+            bb, br, seq, max_ms = state.get(key, (0, 0, 0, None))
+            for _, text, ms in krows:
+                n = len((text or "").encode("utf-8"))
+                if br and bb + n > max_bytes:
+                    want.append((key, seq, br, bb))
+                    seq += 1
+                    bb, br = 0, 0
+                bb, br = bb + n, br + 1
+                max_ms = ms if max_ms is None else max(max_ms, ms)
+            state[key] = [bb, br, seq, max_ms]
+
+    assert sorted(got) == sorted(want)
+    assert carried == state

@@ -269,10 +269,14 @@ def test_stateful_ops_survive_multi_batch_catchup(spark, tmp_path):
     assert got2.select("key").distinct().count() >= 100
 
 
-def test_bucketed_assembler_equals_per_key_stream_and_batch(spark, tmp_path):
-    """Super-key (bucketed) mode is output-identical to per-key mode: same
-    session records from the streaming state machine (n_buckets forces many
-    conversations per bucket) and from the batch degradation."""
+def test_assembler_invariant_to_bucket_count_stream_and_batch(spark, tmp_path):
+    """Session records do not depend on the bucket count: one bucket (every
+    conversation in one fold), 7 buckets (~9 conversations each) and the
+    default give the same sessions from the streaming state machine and
+    from the batch form, and all of them equal a Spark window-function gap
+    oracle."""
+    from pyspark.sql import Window as W
+
     from dlp_dataflow_deidentification_spark.sources.transcripts import (
         synthesize_transcripts,
     )
@@ -286,33 +290,49 @@ def test_bucketed_assembler_equals_per_key_stream_and_batch(spark, tmp_path):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     flush.write.mode("append").parquet(d)
 
+    def sessions(rows):
+        return {
+            (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns, r.last_ms)
+            for r in rows
+        }
+
     def run(n_buckets, name):
         stream = jobs.read_transcript_stream(spark, d)
         out = stateful.conversation_assembler(
             stream, gap_ms=300_000, watermark="1 minute", n_buckets=n_buckets
         )
-        return {
-            (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns, r.last_ms)
-            for r in _run_stream(spark, out, name)
-            .filter("conv_id <> '__flush__'")
-            .collect()
-        }
+        return sessions(
+            _run_stream(spark, out, name).filter("conv_id <> '__flush__'").collect()
+        )
 
-    per_key = run(None, "bkt_per_key")
-    bucketed = run(7, "bkt_super")  # ~9 conversations per bucket
-    assert bucketed == per_key and len(per_key) >= 50
+    def run_batch(n_buckets):
+        return sessions(
+            stateful.conversation_assembler(
+                tdf, gap_ms=300_000, n_buckets=n_buckets
+            ).collect()
+        )
 
-    batch_per_key = {
-        (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns, r.last_ms)
-        for r in stateful.conversation_assembler(tdf, gap_ms=300_000).collect()
-    }
-    batch_bucketed = {
-        (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns, r.last_ms)
-        for r in stateful.conversation_assembler(
-            tdf, gap_ms=300_000, n_buckets=7
-        ).collect()
-    }
-    assert batch_bucketed == batch_per_key
+    # oracle: new session when the gap to the previous turn is >= gap_ms
+    w = W.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    ms = (F.unix_micros(F.col("ts")) / 1000).cast("long")
+    gap = ms - F.lag(ms).over(w)
+    want = sessions(
+        tdf.withColumn("new_s", (gap.isNotNull() & (gap >= 300_000)).cast("int"))
+        .withColumn("sid", F.sum("new_s").over(w.rowsBetween(W.unboundedPreceding, 0)))
+        .groupBy("conv_id", "sid")
+        .agg(
+            F.count("*").alias("n_turns"),
+            F.sum(F.col("text").rlike(r"\[[A-Z_]+\]").cast("int")).alias("n_pii_turns"),
+            F.min(ms).alias("first_ms"),
+            F.max(ms).alias("last_ms"),
+        )
+        .collect()
+    )
+    assert len(want) >= 50
+    assert run(1, "bkt_one") == want
+    assert run(7, "bkt_seven") == want
+    assert run(None, "bkt_default") == want
+    assert run_batch(1) == run_batch(7) == run_batch(None) == want
 
 
 def test_bucketed_assembler_pre_epoch_and_late_rows(spark):
@@ -421,11 +441,11 @@ def test_deid_sessions_bucketed_single_query_stream(spark, tmp_path):
     assert sum(v[1] for v in want.values()) > 0
 
 
-def test_bucketed_batched_requests_equals_per_key(spark, tmp_path):
-    """Super-key batched_requests is output-identical to per-key mode —
-    same multiset of (key, n_rows, n_bytes) batches from the streaming
-    state machine and from the batch degradation (pack_greedy still runs
-    per key inside the bucket)."""
+def test_batched_requests_invariant_to_bucket_count(spark, tmp_path):
+    """The multiset of (key, n_rows, n_bytes) batches does not depend on the
+    bucket count: 1, 7 and the default give the same batches from the
+    streaming state machine and from the batch form, and all of them equal a
+    scalar greedy packer run per key over the rows in turn order."""
     from dlp_dataflow_deidentification_spark.sources.transcripts import (
         synthesize_transcripts,
     )
@@ -439,6 +459,12 @@ def test_bucketed_batched_requests_equals_per_key(spark, tmp_path):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     flush.write.mode("append").parquet(d)
 
+    def multiset(rows):
+        sizes = {}
+        for r in rows:
+            sizes.setdefault(r.key, []).append((r.n_rows, r.n_bytes))
+        return {k: sorted(v) for k, v in sizes.items()}
+
     def run(n_buckets, name):
         stream = jobs.read_transcript_stream(spark, d)
         out = stateful.batched_requests(
@@ -449,30 +475,35 @@ def test_bucketed_batched_requests_equals_per_key(spark, tmp_path):
             order_col="turn_idx",
             n_buckets=n_buckets,
         )
-        sizes = {}
-        for r in (
+        return multiset(
             _run_stream(spark, out, name).filter("key <> '__flush__'").collect()
-        ):
-            sizes.setdefault(r.key, []).append((r.n_rows, r.n_bytes))
-        return {k: sorted(v) for k, v in sizes.items()}
-
-    per_key = run(None, "bktbr_per_key")
-    bucketed = run(7, "bktbr_super")
-    assert bucketed == per_key and len(per_key) >= 50
+        )
 
     def run_batch(n_buckets):
         out = stateful.batched_requests(
-            tdf,
-            max_batch_bytes=2_000,
-            order_col="turn_idx",
-            n_buckets=n_buckets,
+            tdf, max_batch_bytes=2_000, order_col="turn_idx", n_buckets=n_buckets
         )
-        sizes = {}
-        for r in out.collect():
-            sizes.setdefault(r.key, []).append((r.n_rows, r.n_bytes))
-        return {k: sorted(v) for k, v in sizes.items()}
+        return multiset(out.collect())
 
-    assert run_batch(7) == run_batch(None)
+    # oracle: flush before a row that would overflow a non-empty buffer
+    by_key = {}
+    for r in tdf.select("conv_id", "turn_idx", "text").collect():
+        by_key.setdefault(r.conv_id, []).append((r.turn_idx, r.text))
+    want = {}
+    for key, rows in by_key.items():
+        batches, buf_r, buf_b = [], 0, 0
+        for _, text in sorted(rows, key=lambda t: t[0]):
+            n = len((text or "").encode("utf-8"))
+            if buf_r and buf_b + n > 2_000:
+                batches.append((buf_r, buf_b))
+                buf_r, buf_b = 0, 0
+            buf_r, buf_b = buf_r + 1, buf_b + n
+        want[key] = sorted(batches + [(buf_r, buf_b)])
+    assert len(want) >= 50
+    assert run(1, "bktbr_one") == want
+    assert run(7, "bktbr_seven") == want
+    assert run(None, "bktbr_default") == want
+    assert run_batch(1) == run_batch(7) == run_batch(None) == want
 
 
 def test_bucketed_batched_requests_multi_batch_catchup(spark, tmp_path):
@@ -506,14 +537,14 @@ def test_bucketed_batched_requests_multi_batch_catchup(spark, tmp_path):
     assert got.select("key").distinct().count() >= 100
 
 
-def test_bucketed_modes_keep_null_key_rows(spark, tmp_path):
-    """Per-key mode (Spark groupBy) keeps a null-key group; the bucketed
-    folds must emit IDENTICAL output for null keys instead of silently
-    dropping them (pandas groupby dropna default) or splitting them per-row
-    (NaN != NaN in the conv-boundary mask). Exercises batch + streaming,
-    assembler + packer; streaming uses maxFilesPerTrigger=1 so the null
-    conversation is carried across micro-batch state (JSON sentinel
-    encode/decode) and flushed by the timeout branch."""
+def test_null_key_rows_invariant_to_bucket_count(spark, tmp_path):
+    """A null key is one group (Spark groupBy semantics): the folds must not
+    drop its rows (pandas groupby dropna default) or split them per row
+    (NaN != NaN in the conv-boundary mask), whatever the bucket count.
+    Exercises batch + streaming, assembler + packer; streaming uses
+    maxFilesPerTrigger=1 so the null conversation is carried across
+    micro-batch state (JSON sentinel encode/decode) and flushed by the
+    timeout branch."""
     rows = [
         (None, 0, "agent", "hello [EMAIL]", "N/A", "2026-01-01 10:00:00"),
         (None, 1, "agent", "world", "N/A", "2026-01-01 10:01:00"),
@@ -537,13 +568,15 @@ def test_bucketed_modes_keep_null_key_rows(spark, tmp_path):
             key=lambda t: (t[0] is not None, t[0] or "", t[1]),
         )
 
-    per_key = sess_set(stateful.conversation_assembler(df, gap_ms=300_000))
-    bucketed = sess_set(
-        stateful.conversation_assembler(df, gap_ms=300_000, n_buckets=2)
-    )
-    assert bucketed == per_key
+    def batch_sessions(n_buckets):
+        return sess_set(
+            stateful.conversation_assembler(df, gap_ms=300_000, n_buckets=n_buckets)
+        )
+
+    one = batch_sessions(1)
+    assert batch_sessions(2) == batch_sessions(None) == one
     # the null conversation assembles as ONE key with two gap-split sessions
-    assert sum(1 for s in per_key if s[0] is None) == 2
+    assert sum(1 for s in one if s[0] is None) == 2
 
     def batch_multiset(n_buckets):
         out = stateful.batched_requests(
@@ -554,8 +587,8 @@ def test_bucketed_modes_keep_null_key_rows(spark, tmp_path):
             sizes.setdefault(r.key, []).append((r.n_rows, r.n_bytes))
         return {k: sorted(v) for k, v in sizes.items()}
 
-    pk, bk = batch_multiset(None), batch_multiset(2)
-    assert bk == pk and None in pk
+    pk = batch_multiset(1)
+    assert batch_multiset(2) == batch_multiset(None) == pk and None in pk
 
     # streaming: null rows in the FIRST file, flush sentinel in the second →
     # the null session rides the carried JSON state and exits via timeout
@@ -580,7 +613,6 @@ def test_bucketed_modes_keep_null_key_rows(spark, tmp_path):
             )
         )
 
-    s_pk = run(None, "nullkey_per_key")
-    s_bk = run(3, "nullkey_super")
-    assert s_bk == s_pk
-    assert sum(1 for s in s_pk if s[0] is None) == 2
+    s_one = run(1, "nullkey_one")
+    assert run(3, "nullkey_three") == run(None, "nullkey_default") == s_one == one
+    assert sum(1 for s in s_one if s[0] is None) == 2
