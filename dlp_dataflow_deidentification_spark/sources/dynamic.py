@@ -370,14 +370,19 @@ class DynamicSchemaFileStream:
             # a Python-runner stage (measured 0.45–3.7 s per batch for any
             # row count); the Arrow path lands a JVM LocalRelation and the
             # sink write below stays JVM-only (~0.2 s). Values and schema
-            # verified identical; falls back row-wise (correct, slower) if
-            # Arrow conversion is disabled in the session.
+            # verified identical. A failing Arrow conversion (a lone
+            # surrogate in an exception text, with Arrow fallback off) takes
+            # the row-wise path — correct, slower — so the dead-letter write
+            # never fails its batch.
             import pandas as _pd
 
-            ddf = self.spark.createDataFrame(
-                _pd.DataFrame(dead_rows, columns=["path", "reason"]),
-                "path string, reason string",
-            )
+            schema = "path string, reason string"
+            try:
+                ddf = self.spark.createDataFrame(
+                    _pd.DataFrame(dead_rows, columns=["path", "reason"]), schema
+                )
+            except Exception:
+                ddf = self.spark.createDataFrame(dead_rows, schema)
             IdempotentBatchSink(
                 os.path.join(self.output_dir, self.DEAD_LETTER_KEY)
             )(ddf, batch_id)

@@ -27,7 +27,7 @@ from pyspark.sql.types import (
 from ..operators.deidentify import deidentify
 from ..operators.skew import salted_repartition
 from ..plans.config import DeidTemplate
-from .sink import IdempotentBatchSink
+from .sink import DEAD_COL, ERROR_COL, IdempotentBatchSink
 
 ROCKSDB_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -177,7 +177,7 @@ class StreamingDeidJob:
                 dead = F.lit(False)
                 for c in self.text_columns:
                     dead = dead | F.col(c).isNull()
-                df = df.withColumn("__dead", dead)
+                df = df.withColumn(DEAD_COL, dead)
             out = deidentify(df, self.template)
         elif self.mode == "inspect":
             from ..operators.inspect import inspect, inspect_offsets
@@ -278,13 +278,13 @@ class StreamingDeidJob:
                         dead = dead | (
                             F.col(c).isNotNull() & F.col(f"__dec_{c}").isNull()
                         )
-                out = out.withColumn("__dead", dead)
+                out = out.withColumn(DEAD_COL, dead)
             for c in self.reid_columns:
                 # dead rows keep their original (undecodable) token so the
                 # error table carries the evidence, like the reference's
                 # error_log payload
                 val = (
-                    F.when(F.col("__dead"), F.col(c)).otherwise(F.col(f"__dec_{c}"))
+                    F.when(F.col(DEAD_COL), F.col(c)).otherwise(F.col(f"__dec_{c}"))
                     if route_errors
                     else F.col(f"__dec_{c}")
                 )
@@ -296,36 +296,25 @@ class StreamingDeidJob:
         return out
 
     def _foreach(self):
-        """foreachBatch body: one exactly-once sink, or — when a dead-letter
-        dir is configured — a success/error fan-out committed under the SAME
-        batch id (both legs replay-idempotent; the reference's TupleTag
-        success/failure side outputs, common/DLPTransform.java:129-154)."""
+        """foreachBatch body: ONE exactly-once write per micro-batch. With a
+        dead-letter dir the main sink carries the error sink as its
+        dead-letter leg: the batch is tagged with its ``error_message``
+        (null on good rows) and the main sink's single write pass commits
+        both legs under the SAME batch id (both replay-idempotent; the
+        reference's TupleTag success/failure side outputs of one DoFn pass,
+        common/DLPTransform.java:129-154)."""
         main, err = self.sink(), self.error_sink()
+        main.dead_letter = err
+        reason = F.lit(
+            "reid: undecodable token"
+            if self.mode == "reid"
+            else "malformed record: required field null"
+        )
 
         def fn(batch_df: DataFrame, batch_id: int) -> None:
-            if err is not None and "__dead" in batch_df.columns:
-                batch_df.persist()
-                try:
-                    main(batch_df.filter(~F.col("__dead")).drop("__dead"), batch_id)
-                    errors = (
-                        batch_df.filter(F.col("__dead"))
-                        .drop("__dead")
-                        .withColumn(
-                            "error_message",
-                            F.lit(
-                                "reid: undecodable token"
-                                if self.mode == "reid"
-                                else "malformed record: required field null"
-                            ),
-                        )
-                    )
-                    err(errors, batch_id)
-                finally:
-                    batch_df.unpersist()
-            else:
-                if "__dead" in batch_df.columns:
-                    batch_df = batch_df.drop("__dead")
-                main(batch_df, batch_id)
+            if DEAD_COL in batch_df.columns:
+                batch_df = batch_df.withColumn(ERROR_COL, F.when(F.col(DEAD_COL), reason))
+            main(batch_df, batch_id)
 
         return fn
 

@@ -16,8 +16,8 @@ Both operators run on ONE shell (``_bucketed``): rows are grouped by
 map of per-key carries, keyed by bucket — so ``n_buckets`` must not change
 across a checkpoint restart) and gets ONE vectorized pandas fold per
 micro-batch. Streaming input runs ``applyInPandasWithState`` with a
-watermark-driven event-time timeout (the Beam timer analogue) that flushes
-the due keys; batch input runs the same fold under ``applyInPandas`` with an
+watermark-driven event-time timeout (the Beam timer analogue); the due keys
+flush on a timeout and after every fold; batch input runs the same fold under ``applyInPandas`` with an
 empty carry and flushes every key at the end (the oracle-testable form).
 """
 from __future__ import annotations
@@ -301,8 +301,9 @@ def _bucketed(
     watermark — during multi-batch catch-up the watermark can already be
     beyond an old key's event times, and Spark rejects a timeout earlier
     than the watermark (INVALID_TIMEOUT_TIMESTAMP); a past-due key simply
-    flushes at the next tick. A firing flushes exactly the due keys and
-    re-arms for the rest."""
+    flushes at the next tick. A firing — and every fold, since a bucket fed
+    in every batch never times out — flushes exactly the due keys
+    (``v[3] + gap_ms <= watermark``) and re-arms for the rest."""
     cols = schema.fieldNames()
     wdf = df.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
         "__bucket",
@@ -329,11 +330,16 @@ def _bucketed(
     ) -> Iterator[pd.DataFrame]:
         carried: dict = json.loads(state.get[0]) if state.exists else {}
         wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            out = flush((k, v) for k, v in carried.items() if v[3] + gap_ms <= wm)
-            carried = {k: v for k, v in carried.items() if v[3] + gap_ms > wm}
-        else:
-            out, carried = fold(pd.concat(list(pdfs), ignore_index=True), carried)
+        out = []
+        if not state.hasTimedOut:
+            rows, carried = fold(pd.concat(list(pdfs), ignore_index=True), carried)
+            out.append(rows)
+        # due keys flush on the data path too: a bucket that gets rows every
+        # batch never times out, so an idle key in it would otherwise wait
+        # for the stream's end
+        due = [k for k, v in carried.items() if v[3] + gap_ms <= wm]
+        if due:
+            out.append(flush((k, carried.pop(k)) for k in due))
         if carried:
             state.update((json.dumps(carried),))
             state.setTimeoutTimestamp(
@@ -341,8 +347,9 @@ def _bucketed(
             )
         else:
             state.remove()
-        if len(out):
-            yield _decode_null_key(out, cols[0])
+        parts = [f for f in out if len(f)]
+        if parts:
+            yield _decode_null_key(pd.concat(parts, ignore_index=True), cols[0])
 
     return (
         wdf.withWatermark(ts_col, watermark)

@@ -195,6 +195,30 @@ def test_unrecognized_extension_dead_letters_not_poison(spark, dirs):
     assert got == ["noext", "stray.bak"]
 
 
+def test_dead_letter_write_survives_failed_arrow_conversion(spark, dirs, monkeypatch):
+    """The dead-letter batch is built through pandas/Arrow; when that
+    conversion fails and Arrow fallback is off, the row-wise path must still
+    land the dead-letter rows instead of failing (and replaying) the batch."""
+    from pyspark.sql import SparkSession
+
+    def fail(*a, **k):
+        raise ValueError("forced Arrow conversion failure")
+
+    monkeypatch.setattr(SparkSession, "_create_from_pandas_with_arrow", fail)
+    conf = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        _write(os.path.join(dirs["in"], "alpha.csv"), ["a,b", "1,x"])
+        _write(os.path.join(dirs["in"], "stray.bak"), ["junk"])
+        job = DynamicSchemaCsvStream(spark, dirs["in"], dirs["out"], dirs["ckpt"])
+        assert job.run_to_completion()
+        dead = job.read_table(job.DEAD_LETTER_KEY).collect()
+    finally:
+        spark.conf.set(conf, prev)
+    assert [os.path.basename(r.path) for r in dead] == ["stray.bak"]
+
+
 def test_txt_under_multicolumn_pinned_schema(spark, dirs):
     """A .txt file (no txt_delimiter) arriving under a key already pinned to
     a multi-column schema parses under THAT schema: whole line in the first

@@ -543,8 +543,8 @@ def test_null_key_rows_invariant_to_bucket_count(spark, tmp_path):
     (NaN != NaN in the conv-boundary mask), whatever the bucket count.
     Exercises batch + streaming, assembler + packer; streaming uses
     maxFilesPerTrigger=1 so the null conversation is carried across
-    micro-batch state (JSON sentinel encode/decode) and flushed by the
-    timeout branch."""
+    micro-batch state (JSON sentinel encode/decode) and flushed once the
+    watermark passes it."""
     rows = [
         (None, 0, "agent", "hello [EMAIL]", "N/A", "2026-01-01 10:00:00"),
         (None, 1, "agent", "world", "N/A", "2026-01-01 10:01:00"),
@@ -616,3 +616,50 @@ def test_null_key_rows_invariant_to_bucket_count(spark, tmp_path):
     s_one = run(1, "nullkey_one")
     assert run(3, "nullkey_three") == run(None, "nullkey_default") == s_one == one
     assert sum(1 for s in s_one if s[0] is None) == 2
+
+
+def test_busy_bucket_flushes_due_key_on_data_path(spark, tmp_path):
+    """A bucket that gets rows in every micro-batch never times out, so a
+    due key must also flush on the data path. One bucket, one file per
+    micro-batch: conversation A has one turn at t=0, conversation B one turn
+    per hour for 10 h. A is due once the watermark passes 0 + gap, which
+    happens in batch 2 — not in the final no-data batch."""
+    import glob
+    import time as _time
+
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string"
+    )
+    turns = [("A", 0, "2026-01-01 00:00:00")] + [
+        ("B", h, f"2026-01-01 {h:02d}:00:00") for h in range(1, 11)
+    ]
+    d = tmp_path / "busy_in"
+    d.mkdir()
+    base = _time.time() - 100
+    for i, (conv, idx, ts) in enumerate(turns):
+        stage = str(tmp_path / f"busy_stage{i}")
+        spark.createDataFrame([(conv, idx, "agent", "x", "N/A", ts)], schema).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        ).coalesce(1).write.parquet(stage)
+        [part] = glob.glob(os.path.join(stage, "part-*.parquet"))
+        dst = str(d / f"f{i:02d}.parquet")
+        os.replace(part, dst)
+        os.utime(dst, (base + i, base + i))  # the file source's order
+
+    emitted = []
+    stream = jobs.read_transcript_stream(spark, str(d), max_files_per_trigger=1)
+    out = stateful.conversation_assembler(
+        stream, gap_ms=1_800_000, watermark="1 minute", n_buckets=1
+    )
+    q = (
+        out.writeStream.foreachBatch(
+            lambda bdf, bid: emitted.extend((bid, r.conv_id) for r in bdf.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "busy_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert [bid for bid, conv in emitted if conv == "A"] == [2]
+    # B's 10 h turn is still open when the input ends (watermark 9:59)
+    assert sorted(conv for _, conv in emitted) == ["A"] + ["B"] * 9

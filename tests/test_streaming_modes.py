@@ -516,3 +516,72 @@ def test_streaming_inspect_hotword_rules_route_to_offsets_path(spark, tmp_path, 
     gd = {r.likelihood: r["count"] for r in got.groupBy("likelihood").count().collect()}
     wd = {r.likelihood: r["count"] for r in want.groupBy("likelihood").count().collect()}
     assert gd == wd and "VERY_LIKELY" in gd  # the hotword actually lifted
+
+
+@pytest.fixture(scope="module")
+def null_text_dir(spark, input_dir, tmp_path_factory):
+    """The transcripts with every 11th turn's text nulled (dead-lettered in
+    deid mode)."""
+    d = str(tmp_path_factory.mktemp("modes_null_in"))
+    spark.read.parquet(input_dir).withColumn(
+        "text", F.when(F.col("turn_idx") % 11 == 0, F.lit(None)).otherwise(F.col("text"))
+    ).write.mode("overwrite").parquet(d)
+    return d
+
+
+def test_dead_lettering_batch_runs_one_write_job(spark, tmp_path, null_text_dir, template):
+    """The dead-letter leg rides the main sink's write pass: a micro-batch
+    with dead rows runs exactly one Spark job, and both legs commit."""
+    job = jobs.StreamingDeidJob(
+        spark,
+        template,
+        null_text_dir,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        error_output_dir=str(tmp_path / "errs"),
+    )
+    batch = job.transformed(spark.read.schema(jobs.TRANSCRIPT_SCHEMA).parquet(null_text_dir))
+    fn = job._foreach()
+    sc = spark.sparkContext
+    sc.setJobGroup("one-write-pass", "dead-lettering micro-batch")
+    try:
+        fn(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("one-write-pass")) == 1
+    [entry] = job.error_sink().lineage()
+    assert entry["counters"]["n_dead"] > 0
+    assert entry["counters"]["rows_in"] == 2000
+    assert job.sink().read_committed(spark).count() == 2000 - entry["counters"]["n_dead"]
+
+
+def test_dynamic_destinations_with_dead_letter_leg(spark, tmp_path, null_text_dir, template):
+    """partition_output_by and the dead-letter leg together: the main table
+    keeps its role= directories, the error rows keep role (same values and
+    type as the source) next to their error_message."""
+    job = jobs.StreamingDeidJob(
+        spark,
+        template,
+        null_text_dir,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        partition_output_by="role",
+        error_output_dir=str(tmp_path / "errs"),
+    )
+    job.run_to_completion()
+    [bid] = job.sink().committed_ids()
+    assert {"role=agent", "role=customer", "role=tool"} <= set(
+        os.listdir(job.sink().batch_dir(bid))
+    )
+    src = spark.read.parquet(null_text_dir)
+    good = job.sink().read_committed(spark)
+    assert good.filter("text is null").count() == 0
+    assert good.count() == src.filter("text is not null").count()
+    errs = job.error_sink().read_committed(spark)
+    assert dict(errs.dtypes)["role"] == dict(src.dtypes)["role"]
+    assert {(r.conv_id, r.turn_idx, r.role) for r in errs.collect()} == {
+        (r.conv_id, r.turn_idx, r.role) for r in src.filter("text is null").collect()
+    }
+    assert {r.error_message for r in errs.collect()} == {
+        "malformed record: required field null"
+    }
