@@ -713,8 +713,8 @@ def q_inspect_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_conv_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEID → stateful conversation assembly (batch form of the
-    applyInPandasWithState session machine, streaming/stateful.py::
+    """DEID → stateful conversation assembly (batch form of the native
+    session_window aggregate, streaming/stateful.py::
     conversation_assembler; stream≡batch pinned by
     test_conversation_assembler_stream_equals_batch_sessions): per-session
     turn counts, PII-marker turn counts ([INFO_TYPE] tokens minted by the
@@ -728,10 +728,7 @@ def q_conv_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(HERE, "configs/deid_transcripts.json"), crypto_key=KEY
     )
     deid = dds.deidentify(tdf, template)
-    # n_buckets: one vectorized pandas fold per bucket instead of one
-    # dispatch per conversation; output does not depend on the count
-    # (tests/test_stateful.py::test_assembler_invariant_to_bucket_count_*)
-    out = stateful.conversation_assembler(deid, gap_ms=1_800_000, n_buckets=64)
+    out = stateful.conversation_assembler(deid, gap_ms=1_800_000)
     return out.select(
         "conv_id",
         F.col("n_turns").cast("long").alias("n_turns"),

@@ -164,16 +164,16 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
     """Group-count scale curve for the chained deid → stateful-sessions
     stream (writes BENCH_STATEFUL_SCALE.json): FIXED ``turns`` total,
     conversations swept 5k/50k/500k — isolating per-GROUP overhead from
-    per-row cost. One variant per level, bucketed (n_buckets=256, the
-    bench/production path): cost should be ~flat across group counts —
-    per-micro-batch pandas dispatches are bounded by the bucket count, not
-    the key count.
+    per-row cost. One variant per level, the native ``session_window``
+    assembler (the bench/production path): cost should be ~flat across
+    group counts — one state-store row per open session, no per-group
+    dispatch.
 
-    The committed BENCH_STATEFUL_SCALE.json also holds a per-key leg (one
-    state row and one pandas dispatch per conversation, since removed): it
-    fell from 103.8k to 37.6k turns/s between 5k and 50k conversations
-    while bucketed held 100.8k → 124.6k — the measurement that made
-    bucketing the only stateful path.
+    The committed BENCH_STATEFUL_SCALE.json predates the native assembler:
+    its ``bucketed_256`` leg is the earlier bucketed pandas fold (100.8k →
+    124.6k turns/s from 5k to 50k conversations), and its per-key leg (one
+    state row and one pandas dispatch per conversation) fell from 103.8k to
+    37.6k turns/s.
     """
     import dlp_dataflow_deidentification_spark as dds
     from dlp_dataflow_deidentification_spark.sources.transcripts import (
@@ -201,7 +201,7 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
         q = (
             jobs.deid_sessions_stream(
                 spark, template, in_dir, gap_ms=1_800_000,
-                watermark="1 minute", max_files_per_trigger=8, n_buckets=256,
+                watermark="1 minute", max_files_per_trigger=8,
             )
             .writeStream.format("noop")
             .option("checkpointLocation", ckpt)
@@ -231,7 +231,6 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
             gap_ms=1_800_000,
             watermark="1 minute",
             max_files_per_trigger=8,
-            n_buckets=256,
         )
         q = (
             stream.writeStream.format("noop")
@@ -244,7 +243,7 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
         if q.isActive:
             q.stop()
         wall = time.time() - t0
-        level["bucketed_256"] = {
+        level["sessions"] = {
             "wall_sec": round(wall, 2),
             # a timed-out run processed only part of `turns` — a rate
             # over the full count would overstate throughput
@@ -255,9 +254,9 @@ def run_stateful_curve(spark, workdir: str, turns: int, conv_levels: list[int]) 
         shutil.rmtree(in_dir, ignore_errors=True)
         out["levels"].append(level)
         print(json.dumps(level), flush=True)
-    b = [lv["bucketed_256"]["wall_sec"] for lv in out["levels"]]
+    b = [lv["sessions"]["wall_sec"] for lv in out["levels"]]
     if len(b) >= 2:
-        out["bucketed_wall_ratio_last_vs_first"] = round(b[-1] / b[0], 2)
+        out["wall_ratio_last_vs_first"] = round(b[-1] / b[0], 2)
         out["conv_ratio"] = round(
             out["levels"][-1]["n_conversations"] / out["levels"][0]["n_conversations"], 1
         )

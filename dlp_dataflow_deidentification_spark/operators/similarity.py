@@ -7,6 +7,8 @@ the full corpus). Dot products via JVM higher-order functions
 """
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -380,6 +382,17 @@ def lsh_topk(
 
 
 def _centroid_lit(cents: "list[list[float]]"):
+    """The centroid matrix as one SQL literal. A NaN, infinite or None
+    component (e.g. from a NaN or all-null embedding dimension) has no
+    literal form and would surface as an opaque plan-parse error, so it is
+    rejected here, naming the 1-based cell and the 0-based dimension."""
+    for cell, cent in enumerate(cents, 1):
+        for dim, x in enumerate(cent):
+            if x is None or not math.isfinite(x):
+                raise ValueError(
+                    f"centroid of cell {cell} has non-finite component {x!r} "
+                    f"at dimension {dim}"
+                )
     return _matrix_lit(cents)
 
 
@@ -553,7 +566,7 @@ def ivf_index_write(
     # established bit-exact render: repr() round-trips doubles) writes the
     # identical parquet in ~0.15 s. Verified byte-identical values.
     hdr = spark.range(1).select(
-        F.posexplode(_matrix_lit(cents)).alias("pos", "centroid")
+        F.posexplode(_centroid_lit(cents)).alias("pos", "centroid")
     ).select((F.col("pos") + 1).cast("int").alias("cell"), "centroid")
     hdr.coalesce(1).write.mode("overwrite").parquet(_header_path(path))
     return cents

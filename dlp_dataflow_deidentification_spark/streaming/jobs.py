@@ -93,25 +93,21 @@ def deid_sessions_stream(
 
     The de-identification stage is a stateless narrow projection (the whole
     regexp chain fuses into one WholeStageCodegen span), so chaining it
-    under the ``applyInPandasWithState`` session machine costs no extra
-    stage or shuffle beyond the assembler's own groupBy — one query, one
-    stateful operator, per-conversation session records over TOKENIZED text
-    (n_pii_turns counts the [INFO_TYPE] surrogates the deid stage minted).
-    Batch equivalent: ``conversation_assembler(deidentify(df, template))``
-    (driver query ``conv_sessions``); stream≡batch equality is pinned by
-    ``tests/test_stateful.py::test_deid_sessions_single_query_stream``.
-    ``n_buckets``: the assembler's bucket count (one state row / one
-    vectorized pandas fold per bucket, see ``conversation_assembler``);
-    keep it fixed across restarts of one checkpoint.
+    under the assembler's native ``session_window`` aggregate costs no extra
+    stage or shuffle beyond that aggregate's own — one query, one state
+    operator, no Python worker, per-conversation session records over
+    TOKENIZED text (n_pii_turns counts the [INFO_TYPE] surrogates the deid
+    stage minted). Batch equivalent:
+    ``conversation_assembler(deidentify(df, template))`` (query
+    ``conv_sessions`` in ``__spark_entry__``); stream≡batch equality is
+    pinned by ``tests/test_stateful.py::test_deid_sessions_single_query_stream``.
+    ``n_buckets`` is ignored (see ``conversation_assembler``).
     """
     from .stateful import conversation_assembler
 
     stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
     return conversation_assembler(
-        deidentify(stream, template),
-        gap_ms=gap_ms,
-        watermark=watermark,
-        n_buckets=n_buckets,
+        deidentify(stream, template), gap_ms=gap_ms, watermark=watermark
     )
 
 

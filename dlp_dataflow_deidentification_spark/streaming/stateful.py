@@ -6,12 +6,8 @@ ShardRows → BagState + event-time-timer batcher
 buffers rows per sharded key, fires at the window end and greedily packs
 ≤ batchSizeBytes bags; V1 equivalent DLPTextToBigQueryStreaming.java:604-668;
 unit-test contract BatchRequestForDLPTest.java:59-121 asserts the multiset of
-emitted batch sizes per key). ``conversation_assembler`` applies the same
-machinery to the transcript payload: per-conv_id turn accumulation emitted
-when the conversation goes idle past the gap (the stateful upgrade of
-session_window when per-session custom logic is needed).
-
-Both operators run on ONE shell (``_bucketed``): rows are grouped by
+emitted batch sizes per key). Greedy byte-packing has no native Spark form,
+so it runs on the bucketed pandas shell ``_bucketed``: rows are grouped by
 ``pmod(xxhash64(key), n_buckets)``, each bucket holds ONE state row (a JSON
 map of per-key carries, keyed by bucket — so ``n_buckets`` must not change
 across a checkpoint restart) and gets ONE vectorized pandas fold per
@@ -19,6 +15,11 @@ micro-batch. Streaming input runs ``applyInPandasWithState`` with a
 watermark-driven event-time timeout (the Beam timer analogue); the due keys
 flush on a timeout and after every fold; batch input runs the same fold under ``applyInPandas`` with an
 empty carry and flushes every key at the end (the oracle-testable form).
+
+``conversation_assembler`` (per-conv_id gap sessions: turn count, PII-marker
+count, first/last ms) stays inside built-in semantics, so it is Spark's
+native ``session_window`` aggregate (``windows.gap_session_window``): no
+Python worker in the sessions stream.
 """
 from __future__ import annotations
 
@@ -37,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .windows import gap_session_window
 
 BATCH_OUTPUT_SCHEMA = StructType(
     [
@@ -69,7 +72,7 @@ _PII_RE = r"\[[A-Z_]+\]"
 _SESS_COLS = CONV_OUTPUT_SCHEMA.fieldNames()
 _BATCH_COLS = BATCH_OUTPUT_SCHEMA.fieldNames()
 
-# The folds run in pandas, where groupby drops null keys and the packed-state
+# The packer fold runs in pandas, where groupby drops null keys and the packed-state
 # JSON map cannot hold a null key — but Spark's groupBy semantics keep a
 # null-key group. Null keys are therefore encoded as this reserved sentinel
 # inside the fold/state and decoded back to null at every emit point. Control
@@ -185,100 +188,6 @@ def _pack_bucket(
     return pd.DataFrame(out, columns=_BATCH_COLS), carried
 
 
-def _fold_bucket(pdf: pd.DataFrame, carried: dict, gap_ms: int):
-    """Vectorized gap-session fold over ALL conversations in one bucket.
-
-    Semantically identical to a per-conversation scalar fold (split when
-    ``ts - running_max_last >= gap_ms``, min/max first/last merge against
-    the carried open session), but one pandas pass per BUCKET instead of one
-    Python dispatch per conversation — the ShardRows-style batching that
-    amortizes per-key overhead (beam/ShardRows.java:66-81).
-
-    Two cumsum passes:
-      1. rows sorted by (conv, ts): session breaks where the gap to the
-         previous row (== running max, rows ascending) >= gap_ms → chunk
-         sessions aggregated in one groupby;
-      2. chunk sessions ∪ carried open sessions sorted by (conv, first):
-         re-merge with the same rule against a per-conv running-max
-         ``last`` (cummax) — a carried session can overlap/bridge chunk
-         sessions arbitrarily, which running-max handles exactly like the
-         scalar fold does.
-
-    Returns ``(sessions, is_open)``: per-conv time-ordered session records
-    (columns ``_SESS_COLS``) and a bool mask marking each conversation's
-    trailing (still-open) session.
-    """
-    ms = (pdf["ts"].astype("int64") // 1_000_000).to_numpy()
-    pii = (
-        pdf["text"].str.contains(_PII_RE, regex=True, na=False).to_numpy().astype("int64")
-    )
-    conv_in = pdf["conv_id"]
-    if conv_in.isna().any():
-        # null-key group: encoded as the sentinel for the whole fold (and in
-        # the carried state map); decoded back to null by the callers
-        conv_in = conv_in.fillna(_NULL_KEY)
-    rf = pd.DataFrame({"conv": conv_in.to_numpy(), "ms": ms, "pii": pii})
-    rf = rf.sort_values(["conv", "ms"], kind="mergesort", ignore_index=True)
-    new_conv = rf["conv"].ne(rf["conv"].shift())
-    brk = new_conv | (rf["ms"] - rf["ms"].shift() >= gap_ms)
-    rf["sid"] = brk.cumsum()
-    sess = rf.groupby("sid", sort=False).agg(
-        conv=("conv", "first"),
-        n=("pii", "size"),
-        npii=("pii", "sum"),
-        first=("ms", "min"),
-        last=("ms", "max"),
-    )
-    # the carried open session SEEDS the fold (rank 0, BEFORE every chunk
-    # session regardless of its own timestamps): the scalar per-key rule
-    # splits only on a FORWARD gap (ms - running_last >= gap), so a late
-    # chunk session entirely EARLIER than the carried one still merges into
-    # it — sorting carried into timestamp position would wrongly close it
-    # (found by test_fold_bucket_equals_scalar_fold_property)
-    sess["_rank"] = 1
-    if carried:
-        cf = pd.DataFrame(
-            [(c, v[0], v[1], v[2], v[3], 0) for c, v in carried.items()],
-            columns=["conv", "n", "npii", "first", "last", "_rank"],
-        )
-        sess = pd.concat([sess, cf], ignore_index=True)
-    sess = sess.sort_values(
-        ["conv", "_rank", "first"], kind="mergesort", ignore_index=True
-    )
-    new_conv2 = sess["conv"].ne(sess["conv"].shift())
-    # running max of `last` within the conv: a carried session can span
-    # several chunk sessions; shift() crossing a conv boundary is masked
-    # off by new_conv2
-    cm = sess.groupby("conv", sort=False)["last"].cummax()
-    brk2 = new_conv2 | (sess["first"] - cm.shift() >= gap_ms)
-    sess["sid2"] = brk2.cumsum()
-    merged = (
-        sess.groupby("sid2", sort=False)
-        .agg(
-            conv=("conv", "first"),
-            n=("n", "sum"),
-            npii=("npii", "sum"),
-            first=("first", "min"),
-            last=("last", "max"),
-        )
-        .reset_index(drop=True)
-    )
-    merged.columns = pd.Index(_SESS_COLS)
-    is_open = merged["conv_id"].ne(merged["conv_id"].shift(-1)).to_numpy()
-    return merged, is_open
-
-
-def _close_sessions(pdf: pd.DataFrame, carried: dict, gap_ms: int):
-    """``_fold_bucket`` in the shell's fold shape: (closed sessions, carried
-    ``{conv_id: [n, npii, first_ms, last_ms]}`` of the open ones)."""
-    sessions, is_open = _fold_bucket(pdf, carried, gap_ms)
-    carried = {
-        r.conv_id: [int(r.n_turns), int(r.n_pii_turns), int(r.first_ms), int(r.last_ms)]
-        for r in sessions[is_open].itertuples()
-    }
-    return sessions[~is_open], carried
-
-
 def _bucketed(
     df: DataFrame,
     key_col: str,
@@ -290,8 +199,9 @@ def _bucketed(
     fold: Callable[[pd.DataFrame, dict], "tuple[pd.DataFrame, dict]"],
     flush_row: Callable[[str, list], "tuple | None"],
 ) -> DataFrame:
-    """The one stateful shell. ``fold(pdf, carried) -> (rows, carried)``
-    folds one bucket's rows into its carried per-key values (a JSON-able
+    """The bucketed pandas shell under ``batched_requests``.
+    ``fold(pdf, carried) -> (rows, carried)`` folds one bucket's rows into
+    its carried per-key values (a JSON-able
     list whose ``v[3]`` is the key's last event ms); ``flush_row(key, v)``
     is the output row a carried key emits when flushed (None: nothing to
     emit). Keys are sentinel-encoded inside; decoded on emit.
@@ -412,28 +322,35 @@ def conversation_assembler(
 ) -> DataFrame:
     """Per-conv_id gap-session assembly: one record (conv_id, n_turns,
     n_pii_turns, first_ms, last_ms) per session, a session closing when the
-    next turn is ``gap_ms`` or more after it. Streaming input emits a session
-    once the conversation idles past ``gap_ms`` (event-time timeout); batch
-    input emits every session including each conversation's last one.
+    next turn is ``gap_ms`` or more after its latest turn. Event times are
+    floored to the millisecond first, so the split is on whole ms; a NULL
+    conv_id is one conversation and a NULL text counts as no PII marker.
 
-    ``n_buckets`` (default ``DEFAULT_N_BUCKETS``): conversations share
-    ``pmod(xxhash64(conv_id), n_buckets)`` buckets, one state row and ONE
-    vectorized pandas fold per bucket (``_fold_bucket``) — the ShardRows
-    batching analogue (beam/ShardRows.java:66-81): at millions of small
-    conversations per-group Arrow/pandas dispatch would dominate. It must
-    not change across a checkpoint restart: carried sessions are keyed by
-    bucket. Sizing: open conversations per bucket ≈ live_keys / n_buckets;
-    keep the packed state row well under the state store's value-size
-    comfort zone (a few MB) — e.g. 1e8 live conversations → n_buckets ≈
-    1e5–1e6 spread over executors."""
-    return _bucketed(
-        df,
-        "conv_id",
-        "ts",
-        watermark,
-        gap_ms,
-        n_buckets,
-        CONV_OUTPUT_SCHEMA,
-        lambda pdf, carried: _close_sessions(pdf, carried, gap_ms),
-        lambda k, v: (k, *v),
-    )
+    Spark's native ``session_window`` aggregate under the engine's gap rule
+    (``windows.gap_session_window``), for batch and stream input alike: no
+    Python worker, one state-store row per open session. Streaming input
+    (watermarked on the floored ``ts``) emits a session once the watermark
+    reaches its last turn + ``gap_ms``; a turn that is late but inside the
+    watermark merges into, or splits from, the stored sessions by the same
+    rule, so the stream emits exactly the batch form's sessions (turns
+    already behind the watermark are dropped, as by every watermarked
+    operator). Batch input emits every session, including each
+    conversation's last one.
+
+    ``n_buckets`` is ignored: it is accepted so callers of the earlier
+    bucketed pandas fold keep working. That fold's ``applyInPandasWithState``
+    checkpoint cannot be resumed by this operator; restart such a stream
+    from a fresh checkpoint."""
+    wdf = df.withColumn(
+        "ts", F.timestamp_millis(F.unix_millis(F.col("ts").cast("timestamp")))
+    ).withWatermark("ts", watermark)
+    ms = F.unix_millis(F.col("ts"))
+    pii = F.coalesce(F.col("text").rlike(_PII_RE), F.lit(False)).cast("int")
+    return wdf.groupBy(
+        "conv_id", gap_session_window(F.col("ts"), f"{gap_ms} milliseconds")
+    ).agg(
+        F.count(F.lit(1)).cast("int").alias("n_turns"),
+        F.sum(pii).cast("int").alias("n_pii_turns"),
+        F.min(ms).alias("first_ms"),
+        F.max(ms).alias("last_ms"),
+    ).select(*_SESS_COLS)

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.infotypes import InfoType, resolve
@@ -65,6 +65,18 @@ def windowed_infotype_hits(
     )
 
 
+def gap_session_window(ts: Column, gap: str) -> Column:
+    """Spark's native ``session_window`` under the engine's one gap rule: a
+    turn ``gap`` or more after its session's latest turn opens a new session
+    — the split the batch oracles make (``us - pus < gap`` keeps the
+    session) and Beam's half-open Sessions. Spark's own operator still
+    merges a turn exactly ``gap`` later, so the gap is shrunk by one
+    microsecond, the timestamp resolution. The window ``end`` is therefore
+    the latest turn + ``gap`` − 1 µs, and in append mode a session is
+    emitted once the watermark reaches that end."""
+    return F.session_window(ts, f"{gap} -1 microseconds")
+
+
 def session_window_stats(
     df: DataFrame,
     gap: str = "30 minutes",
@@ -72,15 +84,16 @@ def session_window_stats(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Gap session windows keyed by conv_id (north_rule). Built on the native
-    ``session_window`` operator (RocksDB/HDFS state store in streaming mode);
-    the batch form of the same call gives identical sessions for equality
-    tests. Output: conv_id, session_start, session_end, n_turns, n_agent,
-    n_tool."""
+    ``session_window`` operator (RocksDB/HDFS state store in streaming mode)
+    under ``gap_session_window``'s split rule; the batch form of the same
+    call gives identical sessions for equality tests. Output: conv_id,
+    session_start (first turn), session_end (latest turn + ``gap``),
+    n_turns, n_agent, n_tool."""
     wdf = df.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
         ts_col, watermark
     )
     return (
-        wdf.groupBy(F.session_window(F.col(ts_col), gap).alias("sw"), "conv_id")
+        wdf.groupBy(gap_session_window(F.col(ts_col), gap).alias("sw"), "conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.sum(F.when(F.col("role") == "agent", 1).otherwise(0)).alias("n_agent"),
@@ -89,7 +102,7 @@ def session_window_stats(
         .select(
             "conv_id",
             F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
+            (F.col("sw.end") + F.expr("INTERVAL 1 MICROSECOND")).alias("session_end"),
             "n_turns",
             "n_agent",
             "n_tool",

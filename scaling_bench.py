@@ -176,8 +176,8 @@ def materialize_stateful_input(in_dir: str, turns: int) -> None:
 
 
 def run_stateful_scaling() -> None:
-    """N vs 4N for the chained deid → BUCKETED stateful-sessions stream
-    (SPARK_GRAFT_SCALING_ONLY=stateful): the bucket shuffle + RocksDB state
+    """N vs 4N for the chained deid → stateful-sessions stream
+    (SPARK_GRAFT_SCALING_ONLY=stateful): the session shuffle + RocksDB state
     store must scale across executor JVMs, not just the stateless
     projection. Fewer turns than the stream mode (env
     SPARK_GRAFT_SCALING_STATEFUL_TURNS, default 2M) — the per-trial wall at
@@ -212,8 +212,8 @@ def run_stateful_scaling() -> None:
         report["stateful_levels"] = {f"local[{c}]": r for c, r in results.items()}
         report["stateful_scaling_efficiency"] = round(eff, 3)
         report["stateful_note"] = (
-            "deid -> bucketed (n_buckets=256) applyInPandasWithState session "
-            "assembly as ONE query over RocksDB state, same N vs 4N "
+            "deid -> native session_window session assembly as ONE query "
+            "over RocksDB state, same N vs 4N "
             "single-core-executor protocol"
         )
         with open(path, "w") as f:

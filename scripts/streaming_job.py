@@ -97,10 +97,10 @@ def main() -> None:
         return
 
     if os.environ.get("SCALING_MODE") == "stateful":
-        # chained deid → BUCKETED stateful session assembly (ONE query,
-        # RocksDB state): the arbitrary-per-key-logic path's own N vs 4N
-        # evidence — the bucket shuffle + state store must scale across
-        # executors, not just the stateless projection
+        # chained deid → stateful session assembly (ONE query, RocksDB
+        # state): the stateful path's own N vs 4N evidence — the session
+        # shuffle + state store must scale across executors, not just the
+        # stateless projection
         mft = int(os.environ.get("MAX_FILES_PER_TRIGGER", "64"))
         jobs.use_rocksdb_state_store(spark)
 
@@ -117,7 +117,6 @@ def main() -> None:
                         gap_ms=1_800_000,
                         watermark="1 minute",
                         max_files_per_trigger=mft,
-                        n_buckets=256,
                     )
                     .writeStream.format("noop")
                     .option(

@@ -148,103 +148,75 @@ def test_vectorized_packer_equals_scalar_greedy(sizes, carry_bytes, carry_rows, 
 
 
 # ---------------------------------------------------------------------------
-# bucketed session fold ≡ per-conversation scalar fold (pure pandas, no
-# Spark job): the two-cumsum merge (including the carried-session running-max
-# rule) must reproduce the scalar fold on arbitrary timestamps — ties,
-# negative ms, carried sessions overlapping/bridging chunk sessions, late
-# rows before the carried start, and a null conversation id (sentinel key).
+# native session assembler ≡ per-conversation scalar fold: ties, negative and
+# sub-ms timestamps (floored to ms), exact-gap steps, a NULL conversation id
+# and NULL text. Each hypothesis example is a batch of generated cases run
+# as ONE Spark job: a case's id is folded into its conversation keys, and
+# every case sits in its own time band (1 s apart, gap 10 ms) so the cases'
+# NULL-key turns never share a session.
 # ---------------------------------------------------------------------------
 
 
-def _scalar_fold(rows_ms_pii, carried, gap_ms):
-    """The per-conversation reference fold — the session rule
-    ``stateful._fold_bucket`` vectorizes, in plain Python: rows sorted by ms,
-    split when ms - running_last >= gap, min/max merge."""
-    n, npii, first, last = carried
+def _scalar_fold(rows_ms_pii, gap_ms):
+    """The per-conversation reference session fold in plain Python: rows
+    sorted by ms, a new session when ms - last >= gap, else merged into the
+    current one. Returns [(n, npii, first, last), ...]."""
     out = []
-    for ms, pii in sorted(rows_ms_pii, key=lambda x: x[0]):
-        if n and ms - last >= gap_ms:
-            out.append((n, npii, first, last))
-            n, npii = 0, 0
-        n += 1
-        npii += pii
-        first = ms if n == 1 else min(first, ms)
-        last = ms if n == 1 else max(last, ms)
-    return out, (n, npii, first, last)
+    for ms, pii in sorted(rows_ms_pii):
+        if out and ms - out[-1][3] < gap_ms:
+            n, npii, first, _ = out[-1]
+            out[-1] = (n + 1, npii + pii, first, ms)
+        else:
+            out.append((1, pii, ms, ms))
+    return out
 
 
-@settings(max_examples=300, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            # conv id (few keys → collisions; None → the null-key sentinel)
-            st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
-            st.integers(min_value=-50, max_value=50),  # ms (small range → ties/gaps)
-            st.booleans(),  # pii flag
-        ),
-        min_size=1,
-        max_size=40,
-    ),
-    st.dictionaries(  # carried open sessions per conv
+_CASE = st.lists(
+    st.tuples(
+        # conv id (few keys → several turns per conversation; None → NULL key)
         st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
-        st.tuples(
-            st.integers(min_value=1, max_value=5),  # n
-            st.integers(min_value=0, max_value=5),  # npii
-            st.integers(min_value=-60, max_value=60),  # first
-            st.integers(min_value=-60, max_value=60),  # last
-        ),
-        max_size=4,
+        st.integers(min_value=-50, max_value=50),  # ms (small range → ties, gaps)
+        st.sampled_from([0, 0, 0, 1, 500, 999]),  # sub-ms µs part
+        st.sampled_from([None, "x", "[PII] y", "a [EMAIL_ADDRESS]"]),  # text
     ),
+    min_size=1,
+    max_size=20,
 )
-def test_fold_bucket_equals_scalar_fold_property(rows, carried_raw):
-    import pandas as pd
 
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(_CASE, min_size=5, max_size=20))
+def test_assembler_equals_scalar_fold_property(spark, cases):
     from dlp_dataflow_deidentification_spark.streaming.stateful import (
-        _NULL_KEY,
-        _fold_bucket,
+        conversation_assembler,
     )
 
     GAP = 10
-
-    def name(c):  # the fold's key: sentinel-encoded null
-        return _NULL_KEY if c is None else str(c)
-
-    # normalize carried: first <= last
-    carried = {
-        name(c): [n, npii, min(f, l), max(f, l)]
-        for c, (n, npii, f, l) in carried_raw.items()
-    }
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [None if c is None else str(c) for c, _, _ in rows],
-            "ts": pd.to_datetime([ms * 1_000_000 for _, ms, _ in rows], unit="ns"),
-            "text": ["[PII]" if p else "x" for _, _, p in rows],
-        }
+    band_ms = 1000
+    rows, want = [], []
+    for i, case in enumerate(cases):
+        off = (i - len(cases) // 2) * band_ms  # half the cases before 1970
+        per_conv = {}
+        for c, ms, frac_us, text in case:
+            conv = None if c is None else f"{i}:{c}"
+            us = (off + ms) * 1000 + frac_us
+            rows.append((conv, us, text))
+            pii = int(text is not None and re.search(r"\[[A-Z_]+\]", text) is not None)
+            per_conv.setdefault(conv, []).append((us // 1000, pii))
+        for conv, conv_rows in per_conv.items():
+            want.extend((conv, *sess) for sess in _scalar_fold(conv_rows, GAP))
+    df = spark.createDataFrame(rows, "conv_id string, us long, text string").select(
+        "conv_id", F.timestamp_micros("us").alias("ts"), "text"
     )
-    sessions, is_open = _fold_bucket(pdf, dict(carried), GAP)
+    got = [
+        (r.conv_id, r.n_turns, r.n_pii_turns, r.first_ms, r.last_ms)
+        for r in conversation_assembler(df, gap_ms=GAP).collect()
+    ]
 
-    convs = sorted({name(c) for c, _, _ in rows} | set(carried))
-    for conv in convs:
-        rows_c = [
-            (ms, int(p)) for c, ms, p in rows if name(c) == conv
-        ]
-        want_closed, want_open = _scalar_fold(
-            rows_c, tuple(carried.get(conv, (0, 0, 0, 0))), GAP
-        )
-        got = sessions[sessions["conv_id"] == conv]
-        got_closed = [
-            (r.n_turns, r.n_pii_turns, r.first_ms, r.last_ms)
-            for r, op in zip(got.itertuples(), is_open[got.index.to_numpy()])
-            if not op
-        ]
-        got_open = [
-            (r.n_turns, r.n_pii_turns, r.first_ms, r.last_ms)
-            for r, op in zip(got.itertuples(), is_open[got.index.to_numpy()])
-            if op
-        ]
-        assert sorted(got_closed) == sorted(want_closed), (conv, rows_c, carried)
-        if rows_c or conv in carried:
-            assert got_open == [want_open], (conv, rows_c, carried)
+    def key(t):
+        return (t[0] is not None, t[0] or "", t[3])
+
+    assert sorted(got, key=key) == sorted(want, key=key)
 
 
 # ---------------------------------------------------------------------------

@@ -159,6 +159,23 @@ def test_kmeans_centroids_deterministic_and_complete(spark, sf_dir):
     assert len(a) == 4 and all(len(c) == 64 for c in a)
 
 
+def test_non_finite_centroid_raises_clear_error(spark, tmp_path):
+    """A NaN or None centroid component has no SQL literal form: the
+    quantizer and the index build reject it with a ValueError naming the
+    cell and the dimension, not an opaque plan-parse error."""
+    from dlp_dataflow_deidentification_spark.operators import similarity as S
+
+    def corpus(bad):
+        rows = [(i, [1.0 + i, 2.0, 3.0, 4.0]) for i in range(4)]
+        rows[1] = (1, [1.0, 2.0, bad, 4.0])
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    with pytest.raises(ValueError, match=r"cell 2 has non-finite component nan at dimension 2"):
+        S.kmeans_centroids(corpus(float("nan")), k=4, iters=1, dim=4)
+    with pytest.raises(ValueError, match=r"cell 2 has non-finite component None at dimension 2"):
+        S.ivf_index_write(corpus(None), str(tmp_path / "idx"), n_cells=4, iters=1, dim=4)
+
+
 def test_ivf_topk_recall_and_native_plan(spark, sf_dir):
     """IVF must recover ≥90% of the exact top-10 on raw (unplanted random)
     embeddings with nprobe=3 of 8 cells, and plan without Python."""

@@ -2,12 +2,45 @@
 BatchRequestForDLPTest (beam/BatchRequestForDLPTest.java:59-121): explicit
 event timestamps, watermark advanced to infinity via a flush sentinel, exact
 multiset of emitted batch sizes per key."""
+import glob
 import os
+import re
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from dlp_dataflow_deidentification_spark.streaming import jobs, stateful
+
+_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts string"
+
+
+def _one_file_per_batch(spark, d, batches):
+    """Writes each list of (conv_id, turn_idx, ts) turns as one parquet file
+    in ``d`` with increasing mtimes — the file source's order — so that
+    ``maxFilesPerTrigger=1`` makes each list one micro-batch."""
+    d.mkdir()
+    base = time.time() - 100
+    for i, turns in enumerate(batches):
+        stage = str(d.parent / f"{d.name}_stage{i}")
+        spark.createDataFrame(
+            [(conv, idx, "agent", "x", "N/A", ts) for conv, idx, ts in turns], _SCHEMA
+        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.parquet(stage)
+        [part] = glob.glob(os.path.join(stage, "part-*.parquet"))
+        dst = str(d / f"f{i:02d}.parquet")
+        os.replace(part, dst)
+        os.utime(dst, (base + i, base + i))
+    return str(d)
+
+
+def _assert_one_native_state_op(q):
+    """Exactly one state operator ran, and the executed plan has no Python
+    evaluation node (no Arrow/pandas round trip to a Python worker)."""
+    ops = [s["operatorName"] for s in (q.lastProgress or {}).get("stateOperators", [])]
+    assert len(ops) == 1, ops
+    plan = q._jsq.explainInternal(False)  # the executed physical plan
+    nodes = re.findall(r"^[\s:+\-*()\d!]*(\w+)", plan, re.M)
+    assert not [n for n in nodes if re.search("Python|Pandas|Arrow", n)], plan
 
 
 def _write_stream_input(spark, tmp_path, rows):
@@ -111,8 +144,8 @@ def test_conversation_assembler_stream_equals_batch_sessions(spark, tmp_path):
     want = {(r.conv_id, r.first_ms): r.n for r in sess.collect()}
     assert got == want and len(want) >= 30
 
-    # batch degradation (applyInPandas, full flush incl. trailing session)
-    # produces the SAME session set as the streaming state machine
+    # the batch form (every session incl. each conversation's last one)
+    # produces the SAME session set as the stream
     batch_got = {
         (r.conv_id, r.first_ms): r.n_turns
         for r in stateful.conversation_assembler(tdf, gap_ms=300_000).collect()
@@ -174,10 +207,11 @@ def test_conversation_assembler_pre_epoch_timestamps(spark):
 def test_deid_sessions_single_query_stream(spark, tmp_path):
     """Round-4 composition: deid → conversation assembler chained in ONE
     streaming query (stateless tokenization projection under the stateful
-    session machine). Asserts (a) exactly one stateful operator ran, (b)
-    the output equals the batch composition deidentify→assembler, (c) the
-    PII counts are non-trivial (the deid stage really minted surrogates
-    before the stateful stage consumed them)."""
+    session aggregate). Asserts (a) exactly one state operator ran and no
+    Python evaluation node is in the plan, (b) the output equals the batch
+    composition deidentify→assembler, (c) the PII counts are non-trivial
+    (the deid stage really minted surrogates before the stateful stage
+    consumed them)."""
     import os
 
     import dlp_dataflow_deidentification_spark as dds
@@ -213,10 +247,9 @@ def test_deid_sessions_single_query_stream(spark, tmp_path):
         (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns)
         for r in spark.table("deid_sess").filter("conv_id <> '__flush__'").collect()
     }
-    # exactly ONE stateful operator in the query (the session machine); the
-    # deid stage fused in as a stateless projection
-    ops = [s["operatorName"] for s in (q.lastProgress or {}).get("stateOperators", [])]
-    assert ops == ["applyInPandasWithState"], ops
+    # exactly ONE state operator in the query (the session aggregate); the
+    # deid stage fused in as a stateless projection, no Python worker
+    _assert_one_native_state_op(q)
 
     want = {
         (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns)
@@ -269,12 +302,10 @@ def test_stateful_ops_survive_multi_batch_catchup(spark, tmp_path):
     assert got2.select("key").distinct().count() >= 100
 
 
-def test_assembler_invariant_to_bucket_count_stream_and_batch(spark, tmp_path):
-    """Session records do not depend on the bucket count: one bucket (every
-    conversation in one fold), 7 buckets (~9 conversations each) and the
-    default give the same sessions from the streaming state machine and
-    from the batch form, and all of them equal a Spark window-function gap
-    oracle."""
+def test_assembler_stream_and_batch_equal_gap_oracle(spark, tmp_path):
+    """Full session records (turns, PII-marker turns, first and last ms)
+    from the stream and from the batch form both equal a Spark
+    window-function gap oracle."""
     from pyspark.sql import Window as W
 
     from dlp_dataflow_deidentification_spark.sources.transcripts import (
@@ -296,21 +327,13 @@ def test_assembler_invariant_to_bucket_count_stream_and_batch(spark, tmp_path):
             for r in rows
         }
 
-    def run(n_buckets, name):
-        stream = jobs.read_transcript_stream(spark, d)
-        out = stateful.conversation_assembler(
-            stream, gap_ms=300_000, watermark="1 minute", n_buckets=n_buckets
-        )
-        return sessions(
-            _run_stream(spark, out, name).filter("conv_id <> '__flush__'").collect()
-        )
-
-    def run_batch(n_buckets):
-        return sessions(
-            stateful.conversation_assembler(
-                tdf, gap_ms=300_000, n_buckets=n_buckets
-            ).collect()
-        )
+    stream = stateful.conversation_assembler(
+        jobs.read_transcript_stream(spark, d), gap_ms=300_000, watermark="1 minute"
+    )
+    got = sessions(
+        _run_stream(spark, stream, "gap_oracle").filter("conv_id <> '__flush__'").collect()
+    )
+    batch = sessions(stateful.conversation_assembler(tdf, gap_ms=300_000).collect())
 
     # oracle: new session when the gap to the previous turn is >= gap_ms
     w = W.partitionBy("conv_id").orderBy("ts", "turn_idx")
@@ -329,16 +352,12 @@ def test_assembler_invariant_to_bucket_count_stream_and_batch(spark, tmp_path):
         .collect()
     )
     assert len(want) >= 50
-    assert run(1, "bkt_one") == want
-    assert run(7, "bkt_seven") == want
-    assert run(None, "bkt_default") == want
-    assert run_batch(1) == run_batch(7) == run_batch(None) == want
+    assert got == batch == want
 
 
 def test_bucketed_assembler_pre_epoch_and_late_rows(spark):
-    """Bucketed batch fold: pre-epoch (negative-ms) timestamps split/seed
-    correctly, and a late row EARLIER than a carried session's start merges
-    with min(first_ms) — the same edge cases the per-key fold pins."""
+    """Batch form: pre-epoch (negative-ms) conversations split and count
+    PII-marker turns per session next to a post-epoch one."""
     rows = [
         ("c", 0, "agent", "hello [EMAIL]", "N/A", "1969-12-31 22:00:00"),
         ("c", 1, "agent", "world", "N/A", "1969-12-31 22:01:00"),
@@ -351,9 +370,7 @@ def test_bucketed_assembler_pre_epoch_and_late_rows(spark):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     got = sorted(
         (r.conv_id, r.first_ms, r.last_ms, r.n_turns, r.n_pii_turns)
-        for r in stateful.conversation_assembler(
-            df, gap_ms=300_000, n_buckets=2
-        ).collect()
+        for r in stateful.conversation_assembler(df, gap_ms=300_000).collect()
     )
     h22 = -7200_000
     assert got == [
@@ -363,38 +380,11 @@ def test_bucketed_assembler_pre_epoch_and_late_rows(spark):
     ]
 
 
-def test_bucketed_assembler_multi_batch_catchup(spark, tmp_path):
-    """Bucketed mode survives watermark catch-up over time-unordered files
-    (same INVALID_TIMEOUT_TIMESTAMP regression scenario as the per-key test)
-    and flushes the same conversations."""
-    from dlp_dataflow_deidentification_spark.sources.transcripts import (
-        synthesize_transcripts,
-    )
-
-    tdf = synthesize_transcripts(spark, 5000, n_conversations=120)
-    d = str(tmp_path / "bkt_catchup_in")
-    tdf.repartition(8).write.mode("append").parquet(d)
-    import time as _time
-
-    _time.sleep(1.1)
-    flush = spark.createDataFrame(
-        [("__flush__", 0, "agent", "x", "N/A", "2027-01-01 00:00:00")],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    flush.coalesce(1).write.mode("append").parquet(d)
-
-    stream = jobs.read_transcript_stream(spark, d, max_files_per_trigger=2)
-    out = stateful.conversation_assembler(
-        stream, gap_ms=1_800_000, watermark="1 minute", n_buckets=16
-    )
-    got = _run_stream(spark, out, "bkt_catchup").filter("conv_id <> '__flush__'")
-    assert got.select("conv_id").distinct().count() >= 100
-
-
 def test_deid_sessions_bucketed_single_query_stream(spark, tmp_path):
-    """The bench's production path — deid → BUCKETED session assembly in ONE
-    streaming query — equals the per-key batch composition, with exactly one
-    stateful operator in the plan."""
+    """The bench's production call — deid → session assembly in ONE
+    streaming query, with the (ignored) ``n_buckets`` the bench passes —
+    equals the batch composition, with exactly one state operator and no
+    Python evaluation node in the plan."""
     import dlp_dataflow_deidentification_spark as dds
     from dlp_dataflow_deidentification_spark.sources.transcripts import (
         synthesize_transcripts,
@@ -428,8 +418,7 @@ def test_deid_sessions_bucketed_single_query_stream(spark, tmp_path):
         (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns)
         for r in spark.table("deid_sess_bkt").filter("conv_id <> '__flush__'").collect()
     }
-    ops = [s["operatorName"] for s in (q.lastProgress or {}).get("stateOperators", [])]
-    assert ops == ["applyInPandasWithState"], ops
+    _assert_one_native_state_op(q)
 
     want = {
         (r.conv_id, r.first_ms): (r.n_turns, r.n_pii_turns)
@@ -538,13 +527,13 @@ def test_bucketed_batched_requests_multi_batch_catchup(spark, tmp_path):
 
 
 def test_null_key_rows_invariant_to_bucket_count(spark, tmp_path):
-    """A null key is one group (Spark groupBy semantics): the folds must not
-    drop its rows (pandas groupby dropna default) or split them per row
-    (NaN != NaN in the conv-boundary mask), whatever the bucket count.
-    Exercises batch + streaming, assembler + packer; streaming uses
-    maxFilesPerTrigger=1 so the null conversation is carried across
-    micro-batch state (JSON sentinel encode/decode) and flushed once the
-    watermark passes it."""
+    """A null key is one group (Spark groupBy semantics). The packer's pandas
+    fold must not drop its rows (pandas groupby dropna default) or split
+    them per row (NaN != NaN), whatever the bucket count. The assembler
+    keeps the null conversation as one key with its own gap sessions, in
+    the batch form and in a stream (maxFilesPerTrigger=1) where the null
+    session stays open across micro-batches until the watermark passes
+    it."""
     rows = [
         (None, 0, "agent", "hello [EMAIL]", "N/A", "2026-01-01 10:00:00"),
         (None, 1, "agent", "world", "N/A", "2026-01-01 10:01:00"),
@@ -552,10 +541,7 @@ def test_null_key_rows_invariant_to_bucket_count(spark, tmp_path):
         ("c", 0, "agent", "x", "N/A", "2026-01-01 10:00:30"),
         ("c", 1, "agent", "y [PHONE]", "N/A", "2026-01-01 10:02:30"),
     ]
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, tool string, ts string"
-    )
-    df = spark.createDataFrame(rows, schema).withColumn(
+    df = spark.createDataFrame(rows, _SCHEMA).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
 
@@ -568,15 +554,13 @@ def test_null_key_rows_invariant_to_bucket_count(spark, tmp_path):
             key=lambda t: (t[0] is not None, t[0] or "", t[1]),
         )
 
-    def batch_sessions(n_buckets):
-        return sess_set(
-            stateful.conversation_assembler(df, gap_ms=300_000, n_buckets=n_buckets)
-        )
-
-    one = batch_sessions(1)
-    assert batch_sessions(2) == batch_sessions(None) == one
-    # the null conversation assembles as ONE key with two gap-split sessions
-    assert sum(1 for s in one if s[0] is None) == 2
+    h10 = 1_767_261_600_000  # 2026-01-01 10:00:00 UTC in ms
+    batch = sess_set(stateful.conversation_assembler(df, gap_ms=300_000))
+    assert batch == [
+        (None, h10, h10 + 60_000, 2, 1),
+        (None, h10 + 3_600_000, h10 + 3_600_000, 1, 0),
+        ("c", h10 + 30_000, h10 + 150_000, 2, 1),
+    ]
 
     def batch_multiset(n_buckets):
         out = stateful.batched_requests(
@@ -591,66 +575,39 @@ def test_null_key_rows_invariant_to_bucket_count(spark, tmp_path):
     assert batch_multiset(2) == batch_multiset(None) == pk and None in pk
 
     # streaming: null rows in the FIRST file, flush sentinel in the second →
-    # the null session rides the carried JSON state and exits via timeout
+    # the null sessions stay in the state store until the sentinel's
+    # watermark passes them
     d = str(tmp_path / "nullkey_in")
     df.coalesce(1).write.mode("append").parquet(d)
-    import time as _time
-
-    _time.sleep(1.1)
+    time.sleep(1.1)
     flush = spark.createDataFrame(
-        [("__flush__", 0, "agent", "x", "N/A", "2027-01-01 00:00:00")], schema
+        [("__flush__", 0, "agent", "x", "N/A", "2027-01-01 00:00:00")], _SCHEMA
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     flush.coalesce(1).write.mode("append").parquet(d)
 
-    def run(n_buckets, name):
-        stream = jobs.read_transcript_stream(spark, d, max_files_per_trigger=1)
-        out = stateful.conversation_assembler(
-            stream, gap_ms=300_000, watermark="1 minute", n_buckets=n_buckets
-        )
-        return sess_set(
-            _run_stream(spark, out, name).filter(
-                "conv_id is null or conv_id <> '__flush__'"
-            )
-        )
-
-    s_one = run(1, "nullkey_one")
-    assert run(3, "nullkey_three") == run(None, "nullkey_default") == s_one == one
-    assert sum(1 for s in s_one if s[0] is None) == 2
+    stream = jobs.read_transcript_stream(spark, d, max_files_per_trigger=1)
+    out = stateful.conversation_assembler(stream, gap_ms=300_000, watermark="1 minute")
+    got = sess_set(
+        _run_stream(spark, out, "nullkey").filter("conv_id is null or conv_id <> '__flush__'")
+    )
+    assert got == batch
 
 
 def test_busy_bucket_flushes_due_key_on_data_path(spark, tmp_path):
-    """A bucket that gets rows in every micro-batch never times out, so a
-    due key must also flush on the data path. One bucket, one file per
-    micro-batch: conversation A has one turn at t=0, conversation B one turn
-    per hour for 10 h. A is due once the watermark passes 0 + gap, which
-    happens in batch 2 — not in the final no-data batch."""
-    import glob
-    import time as _time
-
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, tool string, ts string"
-    )
-    turns = [("A", 0, "2026-01-01 00:00:00")] + [
-        ("B", h, f"2026-01-01 {h:02d}:00:00") for h in range(1, 11)
+    """An idle conversation is emitted in the first micro-batch whose
+    watermark passes its last turn + gap, while another conversation gets
+    rows in every batch. One file per micro-batch: conversation A has one
+    turn at t=0, conversation B one turn per hour for 10 h. A is due once
+    the watermark passes 0 + gap, which happens in batch 2 — not in the
+    final no-data batch."""
+    turns = [[("A", 0, "2026-01-01 00:00:00")]] + [
+        [("B", h, f"2026-01-01 {h:02d}:00:00")] for h in range(1, 11)
     ]
-    d = tmp_path / "busy_in"
-    d.mkdir()
-    base = _time.time() - 100
-    for i, (conv, idx, ts) in enumerate(turns):
-        stage = str(tmp_path / f"busy_stage{i}")
-        spark.createDataFrame([(conv, idx, "agent", "x", "N/A", ts)], schema).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        ).coalesce(1).write.parquet(stage)
-        [part] = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dst = str(d / f"f{i:02d}.parquet")
-        os.replace(part, dst)
-        os.utime(dst, (base + i, base + i))  # the file source's order
+    d = _one_file_per_batch(spark, tmp_path / "busy_in", turns)
 
     emitted = []
-    stream = jobs.read_transcript_stream(spark, str(d), max_files_per_trigger=1)
-    out = stateful.conversation_assembler(
-        stream, gap_ms=1_800_000, watermark="1 minute", n_buckets=1
-    )
+    stream = jobs.read_transcript_stream(spark, d, max_files_per_trigger=1)
+    out = stateful.conversation_assembler(stream, gap_ms=1_800_000, watermark="1 minute")
     q = (
         out.writeStream.foreachBatch(
             lambda bdf, bid: emitted.extend((bid, r.conv_id) for r in bdf.collect())
@@ -663,3 +620,37 @@ def test_busy_bucket_flushes_due_key_on_data_path(spark, tmp_path):
     assert [bid for bid, conv in emitted if conv == "A"] == [2]
     # B's 10 h turn is still open when the input ends (watermark 9:59)
     assert sorted(conv for _, conv in emitted) == ["A"] + ["B"] * 9
+
+
+def test_assembler_stream_splits_late_turn_exactly_gap_before_open_session(
+    spark, tmp_path
+):
+    """Declared semantics: a late turn exactly ``gap`` before a session
+    still open in the state store starts its own session in the stream, as
+    in the batch form and the conv_sessions oracle (a gap of >= ``gap``
+    splits). The watermark (10 min) is wider than the gap (5 min), so the
+    late turn is not dropped."""
+    batches = [
+        [("c", 1, "2026-01-01 10:00:00"), ("c", 2, "2026-01-01 10:02:00")],
+        [("c", 0, "2026-01-01 09:55:00")],
+        [("__flush__", 0, "2027-01-01 00:00:00")],
+    ]
+    d = _one_file_per_batch(spark, tmp_path / "late_in", batches)
+    stream = jobs.read_transcript_stream(spark, d, max_files_per_trigger=1)
+    out = stateful.conversation_assembler(stream, gap_ms=300_000, watermark="10 minutes")
+
+    def sessions(df):
+        return sorted(
+            (r.first_ms, r.last_ms, r.n_turns)
+            for r in df.filter("conv_id <> '__flush__'").collect()
+        )
+
+    got = sessions(_run_stream(spark, out, "late_gap"))
+    batch = sessions(
+        stateful.conversation_assembler(spark.read.parquet(d), gap_ms=300_000)
+    )
+    h10 = 1_767_261_600_000  # 2026-01-01 10:00:00 UTC in ms
+    assert got == batch == [
+        (h10 - 300_000, h10 - 300_000, 1),
+        (h10, h10 + 120_000, 2),
+    ]

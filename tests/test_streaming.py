@@ -164,6 +164,40 @@ def test_session_window_stream_equals_batch(spark, tmp_path, input_dir):
     assert any(k[0] == "conv-hot" for k in got)
 
 
+def test_session_window_stats_splits_at_exact_gap(spark):
+    """The engine's one gap rule: a turn exactly ``gap`` after a session's
+    latest turn opens a new session (as in the session_windows oracle), one
+    1 µs sooner joins it; ``session_end`` stays the latest turn + gap."""
+    turns = [
+        ("a", "2026-01-01 00:00:00"), ("a", "2026-01-01 00:05:00"),
+        ("b", "2026-01-01 00:00:00"), ("b", "2026-01-01 00:04:59.999999"),
+        ("c", "2026-01-01 00:00:00"), ("c", "2026-01-01 00:05:00.000001"),
+    ]
+    df = spark.createDataFrame(
+        [(c, i, "agent", "x", "N/A", ts) for i, (c, ts) in enumerate(turns)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = sorted(
+        (r.conv_id, r.start_us, r.end_us, r.n_turns)
+        for r in windows.session_window_stats(df, gap="5 minutes")
+        .select(
+            "conv_id",
+            F.unix_micros("session_start").alias("start_us"),
+            F.unix_micros("session_end").alias("end_us"),
+            "n_turns",
+        )
+        .collect()
+    )
+    t0, gap = 1_767_225_600_000_000, 300_000_000  # 2026-01-01 UTC, 5 min (µs)
+    assert got == [
+        ("a", t0, t0 + gap, 1),
+        ("a", t0 + gap, t0 + 2 * gap, 1),
+        ("b", t0, t0 + 2 * gap - 1, 2),
+        ("c", t0, t0 + gap, 1),
+        ("c", t0 + gap + 1, t0 + 2 * gap + 1, 1),
+    ]
+
+
 def test_stream_stream_join_equals_batch(spark, input_dir):
     stream = jobs.read_transcript_stream(spark, input_dir)
     joined = joins.agent_tool_stream_join(stream, max_lag_seconds=3600, watermark="2 hours")
